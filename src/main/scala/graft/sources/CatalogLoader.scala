@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 import graft.functions.NameRules
 
@@ -23,27 +24,42 @@ object CatalogLoader {
   def dropNamespace(spark: SparkSession, namespace: String): Unit =
     spark.sql(s"DROP DATABASE IF EXISTS `$namespace` CASCADE")
 
-  /** External parquet table over a location (A23): the Spark analog of a
-    * BigQuery external table — `USING parquet LOCATION`.
+  /** External parquet table over a location (A23) with its column comments
+    * (A24), registered in one catalog statement — the Spark analog of a
+    * BigQuery external table whose schema descriptions the reference patches
+    * in one `update_table` call (gcpl.py:268-286).
+    *
+    * `schema` is the schema the files at `location` were written with, so
+    * the catalog does not infer it from the parquet footers (a Spark job per
+    * table); fields are registered nullable, as parquet stores them. Each
+    * description is cleaned/truncated with the reference's exact rule;
+    * descriptions of columns the table lacks, and null descriptions, are
+    * ignored. The table must not exist yet (its namespace is recreated
+    * before every load).
     */
-  def linkExternalTable(spark: SparkSession, namespace: String, table: String,
-                        location: String): Unit =
-    spark.sql(
-      s"CREATE TABLE IF NOT EXISTS `$namespace`.`$table` USING parquet LOCATION '${sqlEscape(location)}'")
-
-  /** Column-comment patch (A24): description per column, cleaned/truncated
-    * with the reference's exact rule.
-    */
-  def applyColumnDescriptions(spark: SparkSession, namespace: String, table: String,
-                              descriptions: Map[String, String]): Unit = {
-    val existing = spark.catalog.listColumns(s"$namespace.$table").collect().map(_.name).toSet
-    descriptions.foreach { case (column, desc) =>
-      if (existing.contains(column) && desc != null) {
-        val clean = NameRules.cleanDescription(desc)
-        spark.sql(
-          s"ALTER TABLE `$namespace`.`$table` ALTER COLUMN `$column` COMMENT '${sqlEscape(clean)}'")
-      }
+  def registerExternalTable(spark: SparkSession, namespace: String, table: String,
+                            location: String, schema: StructType,
+                            descriptions: Map[String, String]): Unit = {
+    val fields = schema.fields.map { f =>
+      val field = nullableField(f)
+      descriptions.get(f.name).flatMap(Option(_))
+        .fold(field)(d => field.withComment(NameRules.cleanDescription(d)))
     }
+    spark.catalog.createTable(s"`$namespace`.`$table`", "parquet", StructType(fields),
+      Map("path" -> location))
+  }
+
+  /** `f` with itself and every nested field, array element and map value
+    * nullable.
+    */
+  private def nullableField(f: StructField): StructField =
+    f.copy(dataType = nullable(f.dataType), nullable = true)
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(nullableField))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   private def sqlEscape(s: String): String = s.replace("\\", "\\\\").replace("'", "\\'")

@@ -2,10 +2,13 @@ package graft.sources.odata
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+import java.util.concurrent.{ExecutionException, Executors}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.NameRules
 import graft.sources.{CatalogLoader, EdmSchema, StatlineLayout}
@@ -13,17 +16,21 @@ import graft.sources.{CatalogLoader, EdmSchema, StatlineLayout}
 /** The ingest pipeline (reference `main.py` endpoints, Spark-first).
   *
   * Where the reference runs fetch → ndjson spill → single-writer parquet →
-  * object-store upload as separate stages (main.py:99-376), here one Spark
-  * job does it end to end: page urls become a parallelized collection,
-  * executors fetch + extract rows, `spark.read.json` applies the declared
-  * schema once, and the parquet write lands directly in the target layout
+  * object-store upload as separate stages (main.py:99-376), here each table
+  * is one chain: page urls become a parallelized collection, executors
+  * fetch + extract rows, `spark.read.json` applies the declared schema (or
+  * infers one), and the parquet write lands directly in the target layout
   * (the A19 upload step collapses into the write path — at scale the root
-  * is simply an object-store URI).
+  * is simply an object-store URI). A table whose first page holds rows
+  * costs one Spark job with a declared schema (the write) and two with an
+  * inferred one (inference + write); an absent or empty single-page table
+  * costs none. The chains of a dataset are independent and run
+  * concurrently; the sidecars and the catalog step follow once all are done.
   *
   * Scale notes: one task per page mirrors the reference's dask-bag
-  * parallelism but distributes across executors; the declared CSDL schema
-  * keeps parsing single-pass; per-dataset work is independent, so datasets
-  * fan out by just calling [[run]] concurrently.
+  * parallelism (statline.py:469-473) but distributes across executors; the
+  * declared CSDL schema keeps parsing single-pass; datasets are independent
+  * too, so they fan out by calling [[run]] concurrently.
   *
   * Reference quirks deliberately NOT replicated (SURVEY §2.A): the stale
   * v4 schema variable, the unbound `pq_path` on first-table-empty, and the
@@ -41,10 +48,6 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
     * SparkContext.
     */
   @transient private lazy val clientBc = spark.sparkContext.broadcast(client)
-
-  /** Page RDDs persisted during [[run]]; released once the snapshot is done. */
-  private val pendingUnpersist =
-    scala.collection.mutable.Buffer.empty[org.apache.spark.rdd.RDD[String]]
 
   /** Tables dropped from the loop (statline.py:418-427): metadata tables
     * handled separately and the redundant untyped main table.
@@ -124,23 +127,29 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
     }
   }
 
-  /** Fetches one table (all pages, executor-parallel) as a DataFrame.
-    * Returns None when the table is absent or every page is empty (A15 —
-    * e.g. 84799NED's CategoryGroups, 83765NED's dropped Observations blob).
+  /** Fetches one table (all pages, executor-parallel) as a DataFrame and
+    * hands it to `use`. Returns None, without calling `use`, when the table
+    * is absent or every page is empty (A15 — e.g. 84799NED's
+    * CategoryGroups, 83765NED's dropped Observations blob).
     */
-  def fetchTable(tableUrl: String, nRecords: Option[Long], odataVersion: String,
-                 schema: Option[org.apache.spark.sql.types.StructType]): Option[DataFrame] = {
-    // Driver-side absence probe: a table whose FIRST page is absent is an
-    // absent table (A15) — skip the Spark job entirely. With presence
-    // established, executors can treat any missing `$skip` page as a GAP
-    // (silent truncation) rather than absence. Costs one extra page fetch
-    // per table live; the reference's sequential fetcher paid the same page.
-    if (client.get(tableUrl).isEmpty) return None
+  def fetchTable[T](tableUrl: String, nRecords: Option[Long], odataVersion: String,
+                    schema: Option[StructType])(use: DataFrame => T): Option[T] = {
+    // Driver-side probe of the first page: an absent first page is an absent
+    // table (A15) — skip the Spark job entirely. With presence established,
+    // executors can treat any missing `$skip` page as a GAP (silent
+    // truncation) rather than absence. Costs one extra page fetch per table
+    // live; the reference's sequential fetcher paid the same page. The
+    // probe's first row also settles what would otherwise take a Spark job
+    // each: that the table is non-empty, and the wire field order.
+    val firstRow = client.get(tableUrl) match {
+      case None => return None
+      case Some(payload) =>
+        Option(mapper.readTree(payload).get("value"))
+          .filter(v => v.isArray && v.size() > 0).map(_.get(0))
+    }
     val urls = ODataUrls.pageUrls(tableUrl, nRecords, odataVersion)
+    if (firstRow.isEmpty && urls.size == 1) return None
     val cl = clientBc // broadcast handle, not the client itself
-    // Persisted: this RDD is consumed up to three times (emptiness probe,
-    // schema inference for undeclared tables, the parquet write) — without
-    // the persist each pass would re-fetch every page from the source.
     val lines = spark.sparkContext.parallelize(urls, urls.size).flatMap { u =>
       val page = cl.value.get(u)
       // missing FIRST page = absent/empty table (expected); a missing
@@ -153,32 +162,38 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
         if (v == null || !v.isArray) Seq.empty[String]
         else (0 until v.size()).map(i => m.writeValueAsString(v.get(i)))
       }
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pendingUnpersist += lines
-    if (lines.isEmpty()) None
-    else {
-      import spark.implicits._
-      val ds = spark.createDataset(lines)
-      Some(schema match {
-        case Some(st) => spark.read.schema(st).json(ds)
-        case None =>
-          // Spark's json inference alphabetizes fields; the reference keeps
-          // wire order (pyarrow pins the first page's field order). Restore
-          // document order from the first row, inferred-only tail after.
-          val inferred = spark.read.json(ds)
-          val firstOrder = {
-            val it = new ObjectMapper().readTree(lines.first()).fieldNames()
-            val b = Seq.newBuilder[String]
-            while (it.hasNext) b += it.next()
-            b.result()
-          }
-          val have = inferred.columns.toSet
-          val ordered = firstOrder.filter(have) ++ inferred.columns.filterNot(firstOrder.toSet)
-          // backquote: raw field names may contain dots (`odata.type`)
-          inferred.select(ordered.map(n =>
-            org.apache.spark.sql.functions.col(s"`$n`")).toIndexedSeq: _*)
-      })
     }
+    // The write reads `lines` once. An emptiness check (first page empty,
+    // later pages unknown) or schema inference reads it again, and would
+    // re-fetch every page from the source without the persist.
+    val reread = firstRow.isEmpty || schema.isEmpty
+    if (reread) lines.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      if (firstRow.isEmpty && lines.isEmpty()) None
+      else {
+        import spark.implicits._
+        val ds = spark.createDataset(lines)
+        Some(use(schema match {
+          case Some(st) => spark.read.schema(st).json(ds)
+          case None =>
+            // Spark's json inference alphabetizes fields; the reference keeps
+            // wire order (pyarrow pins the first page's field order). Restore
+            // document order from the first row, inferred-only tail after.
+            val inferred = spark.read.json(ds)
+            val firstOrder = {
+              val it = firstRow.getOrElse(mapper.readTree(lines.first())).fieldNames()
+              val b = Seq.newBuilder[String]
+              while (it.hasNext) b += it.next()
+              b.result()
+            }
+            val have = inferred.columns.toSet
+            val ordered = firstOrder.filter(have) ++ inferred.columns.filterNot(firstOrder.toSet)
+            // backquote: raw field names may contain dots (`odata.type`)
+            inferred.select(ordered.map(n =>
+              org.apache.spark.sql.functions.col(s"`$n`")).toIndexedSeq: _*)
+        }))
+      }
+    } finally if (reread) lines.unpersist(blocking = false)
   }
 
   /** Canonical v4 EAV types (SURVEY §1.4): Id BIGINT, Value nullable DOUBLE,
@@ -238,13 +253,15 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
 
     val tables = ODataUrls.discoverTables(client, id, odataVersion, thirdParty)
       .filterNot { case (name, _) => DenyList(name) }
+      .map { case (key, rawUrl) =>
+        (key, rawUrl, if (odataVersion == "v3") s"$rawUrl?$$format=json" else rawUrl)
+      }
+    val dataPropertiesUrl = tables.collectFirst { case ("DataProperties", _, url) => url }
 
     Files.createDirectories(Paths.get(snapshotDir))
-    var dataPropertiesUrl: Option[String] = None
 
-    val written = tables.flatMap { case (key, rawUrl) =>
-      val url = if (odataVersion == "v3") s"$rawUrl?$$format=json" else rawUrl
-      if (key == "DataProperties") dataPropertiesUrl = Some(url)
+    // one chain per table (fetch → type → write), independent of the others
+    val chains = tables.map { case (key, rawUrl, url) => () =>
       val tableName = StatlineLayout.tableName(source, odataVersion, id, key)
       val (nRecords, schema) =
         if (MainTables(key)) {
@@ -258,7 +275,7 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
             else None
           (n, st)
         } else (None, None)
-      fetchTable(url, nRecords, odataVersion, schema).map { df =>
+      fetchTable(url, nRecords, odataVersion, schema) { df =>
         // v4 Observations: the reference never solved typing for the long
         // format (statline.py:441-443 TODO + the stale-schema quirk). Fix:
         // canonicalize the EAV base columns after inference so `Value` is
@@ -271,9 +288,10 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
         }
         val out = s"$snapshotDir/$tableName.parquet"
         typed.write.mode(SaveMode.Overwrite).parquet(out)
-        out
+        (out, typed.schema)
       }
     }
+    val written = concurrently(chains).flatten
 
     // Sidecars (A18): Metadata.json always (raw tree — nested fields and
     // nulls preserved); ColDescriptions.json v3 only.
@@ -290,25 +308,34 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
           scala.jdk.CollectionConverters.MapHasAsJava(colDescs).asJava)))
     }
 
-    pendingUnpersist.foreach(_.unpersist(blocking = false))
-    pendingUnpersist.clear()
-
     if (endpoint == "catalog") {
       val ns = StatlineLayout.namespace(source, odataVersion, id)
       // reference behavior: always drop-then-recreate (gcpl.py:549-573)
       CatalogLoader.dropNamespace(spark, ns)
       CatalogLoader.createNamespace(spark, ns,
         meta.getOrElse("ShortDescription", meta.getOrElse("Description", "")).take(1000))
-      written.foreach { path =>
+      written.foreach { case (path, schema) =>
         val file = path.split('/').last
-        CatalogLoader.linkExternalTable(spark, ns, StatlineLayout.warehouseTableId(file), path)
-      }
-      // column-comment patch targets the main table (gcpl.py:233-288)
-      written.map(_.split('/').last).find(_.contains("TypedDataSet")).foreach { f =>
-        CatalogLoader.applyColumnDescriptions(spark, ns,
-          StatlineLayout.warehouseTableId(f), colDescs)
+        // column comments go on the main table only (gcpl.py:233-288)
+        CatalogLoader.registerExternalTable(spark, ns, StatlineLayout.warehouseTableId(file),
+          path, schema, if (file.contains("TypedDataSet")) colDescs else Map.empty)
       }
     }
-    IngestResult(skipped = false, snapshotDir, written)
+    IngestResult(skipped = false, snapshotDir, written.map(_._1))
+  }
+
+  /** Runs `chains` on a pool of one thread per chain and returns their
+    * results in order. The pool threads are created by the calling thread,
+    * so they inherit its SparkContext local properties (job group,
+    * scheduler pool). When chains throw, the rest still run to completion;
+    * then the first failure in order is rethrown as the chain threw it.
+    */
+  private def concurrently[T](chains: Seq[() => T]): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(chains.size.max(1))
+    try {
+      chains.map(c => pool.submit(() => c()))
+        .map(f => try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) })
+        .map(_.fold(e => throw e, identity))
+    } finally pool.shutdown()
   }
 }

@@ -13,21 +13,33 @@ class CatalogLoaderSpec extends AnyFunSuite {
     CatalogLoader.dropNamespace(spark, ns)
     CatalogLoader.createNamespace(spark, ns, "test dataset: 'quoted'")
     assert(CatalogLoader.namespaceExists(spark, ns))
+    assert(spark.catalog.getDatabase(ns).description == "test dataset: 'quoted'")
     // idempotent create (reference swallows Conflict, gcpl.py:388-393)
     CatalogLoader.createNamespace(spark, ns, "test dataset: 'quoted'")
 
-    CatalogLoader.linkExternalTable(spark, ns, "region", s"${TestSpark.Sf0001}/region.parquet")
+    val location = s"${TestSpark.Sf0001}/region.parquet"
+    val schema = spark.read.parquet(location).schema
+    val desc = Map("r_name" -> ("region name\nwith newline" + "x" * 2000), "missing" -> "ignored",
+      "r_comment" -> null)
+    CatalogLoader.registerExternalTable(spark, ns, "region", location, schema, desc)
     assert(spark.table(s"$ns.region").count() == 5)
-
-    val desc = Map("r_name" -> ("region name\nwith newline" + "x" * 2000), "missing" -> "ignored")
-    CatalogLoader.applyColumnDescriptions(spark, ns, "region", desc)
+    // external: dropping the namespace must leave the files in place
+    assert(spark.catalog.getTable(s"$ns.region").tableType == "EXTERNAL")
+    // registered schema = the files' schema; comments only where described
+    val registered = spark.table(s"$ns.region").schema
+    assert(registered.map(f => (f.name, f.dataType, f.nullable)) ==
+      schema.map(f => (f.name, f.dataType, f.nullable)))
+    assert(registered.fields.flatMap(_.getComment()).length == 1)
     val comment = spark.sql(s"DESCRIBE TABLE $ns.region")
       .filter("col_name = 'r_name'").select("comment").head().getString(0)
     assert(comment.startsWith("region namewith newline"))
     assert(comment.length == 1023 && comment.endsWith("..."))
+    // the missing column is ignored, not added
+    assert(!spark.table(s"$ns.region").columns.contains("missing"))
 
     CatalogLoader.dropNamespace(spark, ns)
     assert(!CatalogLoader.namespaceExists(spark, ns))
+    assert(spark.read.parquet(location).count() == 5)
   }
 
   test("layout contract: names, paths, latest-folder") {

@@ -2,11 +2,20 @@ package graft.sources.odata
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sources.{CatalogLoader, StatlineLayout}
 
 /** End-to-end ingest against an offline replay of the CBS OData protocol —
   * the Spark analog of the reference's golden-fixture tests
@@ -122,7 +131,7 @@ class StatlineIngestSpec extends AnyFunSuite {
     val ingest2 = new StatlineIngest(spark, ReplayClient(v3Fixture("2024-05-05T00:00:00")))
     val res4 = ingest2.run(id, root, date = LocalDate.of(2024, 6, 1))
     assert(!res4.skipped && res4.snapshotDir.endsWith("20240601"))
-    graft.sources.CatalogLoader.dropNamespace(spark, s"cbs_v3_$id")
+    CatalogLoader.dropNamespace(spark, s"cbs_v3_$id")
   }
 
   test("v4 ingest: version probe, relative urls, long-format main table") {
@@ -143,6 +152,108 @@ class StatlineIngestSpec extends AnyFunSuite {
     // no ColDescriptions sidecar for v4 (main.py:356-357)
     assert(!Files.exists(Paths.get(res.snapshotDir, s"cbs.v4.${v4Id}_ColDescriptions.json")))
     assert(Files.exists(Paths.get(res.snapshotDir, s"cbs.v4.${v4Id}_Metadata.json")))
+  }
+
+  /** Runs `body` and returns its result with the Spark jobs it launched and
+    * the logical plan names of the eager commands it executed.
+    */
+  private def counted[T](body: => T): (T, Int, Seq[String]) = {
+    val jobs = new AtomicInteger
+    val commands = new ConcurrentLinkedQueue[String]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val commandListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "command") commands.add(qe.logical.nodeName)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(commandListener)
+    try {
+      val r = body
+      ListenerBusDrain(spark.sparkContext)
+      (r, jobs.get, commands.asScala.toSeq)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(commandListener)
+    }
+  }
+
+  test("catalog ingest: a job per declared table, two per inferred, none per empty; no ALTERs") {
+    val root = Files.createTempDirectory("graft_ingest_jobs").toString
+    val date = LocalDate.of(2024, 3, 1)
+    val (v3, v3Jobs, v3Commands) = counted(
+      new StatlineIngest(spark, ReplayClient(v3Fixture("2024-01-01T00:00:00")))
+        .run(id, root, endpoint = "catalog", date = date))
+    // TypedDataSet declared (the write); DataProperties and Perioden
+    // inferred (inference + write); CategoryGroups a single empty page
+    assert(v3Jobs == 1 + 2 + 2)
+    val (v4, v4Jobs, v4Commands) = counted(
+      new StatlineIngest(spark, ReplayClient(v4Fixture))
+        .run(v4Id, root, endpoint = "catalog", date = date))
+    assert(v4Jobs == 2 + 2) // Observations and MeasureCodes inferred
+    // drop + create namespace, then one write and one registration per table
+    Seq(v3 -> v3Commands, v4 -> v4Commands).foreach { case (res, commands) =>
+      assert(!commands.exists(_.contains("Alter")), commands)
+      assert(commands.size == 2 + 2 * res.parquetPaths.size, commands)
+    }
+
+    // every registered table has the schema its files were written with
+    Seq((v3, "v3", id), (v4, "v4", v4Id)).foreach { case (res, version, ds) =>
+      res.parquetPaths.foreach { path =>
+        val table = StatlineLayout.warehouseTableId(path.split('/').last)
+        val registered = spark.table(s"${StatlineLayout.namespace("cbs", version, ds)}.$table")
+        assert(registered.schema.map(f => (f.name, f.dataType)) ==
+          spark.read.parquet(path).schema.map(f => (f.name, f.dataType)), path)
+      }
+    }
+    val main = spark.table(s"cbs_v3_$id.${id}_TypedDataSet").schema
+    assert(main("Perioden").getComment().contains("Periodsof time"))
+    assert(main("Banen_1").getComment().exists(c => c.length == 1023 && c.endsWith("...")))
+    assert(main("ID").getComment().isEmpty)
+    CatalogLoader.dropNamespace(spark, s"cbs_v3_$id")
+    CatalogLoader.dropNamespace(spark, s"cbs_v4_$v4Id")
+  }
+
+  test("a re-ingest with a page gap throws after all its chains end; the catalog keeps the old snapshot") {
+    val root = Files.createTempDirectory("graft_ingest_gap").toString
+    new StatlineIngest(spark, ReplayClient(v3Fixture("2024-01-01T00:00:00")))
+      .run(id, root, endpoint = "catalog", date = LocalDate.of(2024, 3, 1))
+    val gap = v3Fixture("2024-05-05T00:00:00") - s"$v3Base/TypedDataSet?$$format=json&$$skip=10000"
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception](
+      new StatlineIngest(spark, SlowClient(ReplayClient(gap), s"$v3Base/Perioden?$$format=json"))
+        .run(id, root, endpoint = "catalog", date = LocalDate.of(2024, 6, 1)))
+    assert(!e.isInstanceOf[ExecutionException])
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("missing pagination page")), e)
+    // the slow chain wrote its table before the throw; nothing still fetches
+    assert(Files.exists(Paths.get(s"$root/cbs/v3/$id/20240601/cbs.v3.${id}_Perioden.parquet/_SUCCESS")))
+    assert(SlowClient.inFlight.get == 0)
+    // no page cache outlives the failed run
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    val main = spark.table(s"cbs_v3_$id.${id}_TypedDataSet")
+    assert(main.count() == 3)
+    assert(main.inputFiles.nonEmpty && main.inputFiles.forall(_.contains("/20240301/")))
+    CatalogLoader.dropNamespace(spark, s"cbs_v3_$id")
+  }
+
+  test("a multi-page table whose first page is empty is still ingested") {
+    val root = Files.createTempDirectory("graft_ingest_empty_first").toString
+    // 100001 observations: pages at 0 and $skip=100000, only the second holds rows
+    val fixture = v4Fixture ++ Map(
+      s"$v4Base/Properties" ->
+        """{"Identifier":"88888TST","Description":"v4 test","Modified":"2024-02-02T00:00:00","ObservationCount":100001}""",
+      s"$v4Base/Observations" -> page(),
+      s"$v4Base/Observations?$$skip=100000" ->
+        page("""{"Id":5,"Measure":"M1","Value":1.5,"StringValue":null}"""))
+    val res = new StatlineIngest(spark, ReplayClient(fixture))
+      .run(v4Id, root, date = LocalDate.of(2024, 3, 1))
+    val obs = spark.read.parquet(s"${res.snapshotDir}/cbs.v4.${v4Id}_Observations.parquet")
+    assert(obs.columns.toSeq == Seq("Id", "Measure", "Value", "StringValue")) // wire order
+    assert(obs.collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq == Seq((5L, 1.5)))
   }
 
   test("pagination math matches the reference (10k/100k, base first)") {
@@ -193,4 +304,21 @@ class StatlineIngestSpec extends AnyFunSuite {
     assert(ODataUrls.checkV4(c, "A", thirdParty = true) == "v3")
     assert(ODataUrls.checkV4(c, "B", thirdParty = false) == "v3")
   }
+}
+
+/** Delays every fetch of `slowUrl` (driver probe and executor page alike)
+  * and counts the fetches in flight across all copies of the client.
+  */
+final case class SlowClient(inner: StatlineClient, slowUrl: String) extends StatlineClient {
+  override def get(url: String): Option[String] = {
+    SlowClient.inFlight.incrementAndGet()
+    try {
+      if (url == slowUrl) Thread.sleep(500)
+      inner.get(url)
+    } finally SlowClient.inFlight.decrementAndGet()
+  }
+}
+
+object SlowClient {
+  val inFlight = new AtomicInteger
 }
