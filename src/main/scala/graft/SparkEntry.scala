@@ -69,6 +69,14 @@ object SparkEntry {
     // per partition falls back to the memory-safe sort — the correct
     // at-scale posture.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "131072",
+    // Local file permissions set in-process (InProcessLocalFileSystem). With
+    // no Hadoop native library, the stock local filesystem forks a `chmod`
+    // for every file and directory it creates. JFR profiles of 30 s timed
+    // windows (4 vCPUs) counted 545 `chmod` and 1,712 `readlink` spawns on
+    // analyst_mix and 1,461 `chmod` on ingest_sync, each spawn with its own
+    // stderr-reader thread. The `readlink`s come from FileContext
+    // checkpoints, which replays avoid (EventStreams.ReplayPosture).
+    "spark.hadoop.fs.file.impl" -> classOf[InProcessLocalFileSystem].getName,
   )
 
   def configure(b: SparkSession.Builder): SparkSession.Builder =

@@ -87,9 +87,16 @@ final case class RetryingClient(inner: StatlineClient, maxRetries: Int = 3,
   * tables rely on this); any other status → exception. Mapping a 429/500 to
   * None would silently drop a page mid-pagination and write a truncated
   * snapshot whose Modified date then blocks re-ingestion.
+  *
+  * `timeout` bounds the connect and, per request, the wait for the response
+  * headers; a server that stalls surfaces as `HttpTimeoutException`, an
+  * `IOException` that [[RetryingClient]] retries. Without it a stalled
+  * source would hang its Spark task forever.
   */
-final class HttpClient extends StatlineClient {
-  @transient private lazy val client = java.net.http.HttpClient.newHttpClient()
+final class HttpClient(timeout: java.time.Duration = java.time.Duration.ofSeconds(60))
+    extends StatlineClient {
+  @transient private lazy val client =
+    java.net.http.HttpClient.newBuilder().connectTimeout(timeout).build()
 
   /** Percent-encodes each query-parameter *value* (URLs are assembled from
     * plain text upstream — "$filter=Identifier eq 'X'" — and URI.create
@@ -114,7 +121,7 @@ final class HttpClient extends StatlineClient {
 
   override def get(url: String): Option[String] = {
     val req = java.net.http.HttpRequest.newBuilder(
-      java.net.URI.create(encodeQueryValues(url))).GET().build()
+      java.net.URI.create(encodeQueryValues(url))).timeout(timeout).GET().build()
     val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
     resp.statusCode() match {
       case 200 => Some(resp.body())

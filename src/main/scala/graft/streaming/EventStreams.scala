@@ -43,9 +43,11 @@ object EventStreams {
       new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Buffer[String]]())
 
   /** Scratch root for replay staging + throwaway checkpoints (tmpfs when
-    * available: offset/commit WAL and state-store delta files are
-    * fsync-heavy small writes — RAM-backed beats disk). One definition for
-    * the whole engine: [[graft.StageDir.scratchBase]].
+    * available). A replay writes dozens of small files (offset/commit WAL,
+    * state-store deltas); their measured cost was per-file metadata calls,
+    * one forked `chmod`/`readlink` each before [[graft.InProcessLocalFileSystem]]
+    * and [[ReplayPosture]], not the bytes. One definition for the whole
+    * engine: [[graft.StageDir.scratchBase]].
     */
   private[graft] def scratchBase: String = graft.StageDir.scratchBase
 
@@ -125,12 +127,24 @@ object EventStreams {
     *    and the default 60s maintenance sweep would iterate and snapshot
     *    ALL of them mid-bench. Replays never resume, so maintenance is pure
     *    overhead.
+    *  - checkpoint files go through the FileSystem API, not Spark's default
+    *    FileContext manager: FileContext's local filesystem builds its own
+    *    stock raw filesystem (so the in-process permissions of
+    *    [[graft.InProcessLocalFileSystem]] never reach it) and forks a
+    *    `readlink` on every rename. A local rename is an atomic rename(2),
+    *    so `createAtomic` keeps its guarantee. Durable checkpoints, and HDFS
+    *    or object-store paths, keep Spark's default — only these throwaway
+    *    clones carry the setting;
+    *  - no checksum sidecars for the same never-resumed checkpoints.
     */
   private val ReplayPosture = Map(
     "spark.sql.streaming.minBatchesToRetain" -> "1",
     "spark.sql.streaming.stateStore.formatValidation.enabled" -> "false",
     "spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s",
-    "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "1000")
+    "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "1000",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 

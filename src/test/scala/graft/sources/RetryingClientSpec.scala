@@ -1,11 +1,16 @@
 package graft.sources.odata
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The retry/throttle behavior the reference's live CI exercises against
   * CBS, certified offline: a flaky client that throws once (HTTP 429) and
-  * succeeds on retry, a 404 that must NOT be retried, and a permanently
-  * failing fetch that surfaces its error after the bounded attempts.
+  * succeeds on retry, a 404 that must NOT be retried, a permanently
+  * failing fetch that surfaces its error after the bounded attempts, and a
+  * stalled server whose `HttpClient` timeout is retried the same way.
   */
 class RetryingClientSpec extends AnyFunSuite {
 
@@ -80,6 +85,28 @@ class RetryingClientSpec extends AnyFunSuite {
     intercept[RuntimeException](c.get("u"))
     assert(flaky.calls("u") == 1)
     assert(slept().isEmpty)
+  }
+
+  test("a stalled server times out, and RetryingClient retries the timeout then rethrows") {
+    // accepts connections (kernel backlog) and never answers
+    val server = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    try {
+      val url = s"http://127.0.0.1:${server.getLocalPort}/CBS/83583NED?$$format=json"
+      val http = new HttpClient(java.time.Duration.ofMillis(300))
+      // bounded wait: a client without timeouts fails here instead of hanging the suite
+      val outcome = Await.result(Future(scala.util.Try(http.get(url))), 10.seconds)
+      assert(outcome.failed.toOption.exists(_.isInstanceOf[java.net.http.HttpTimeoutException]),
+        s"expected HttpTimeoutException, got $outcome")
+
+      var attempts = 0
+      val counting = new StatlineClient {
+        override def get(u: String): Option[String] = { attempts += 1; http.get(u) }
+      }
+      val (c, slept) = retrying(counting)
+      intercept[java.net.http.HttpTimeoutException](c.get(url))
+      assert(attempts == c.maxRetries + 1)
+      assert(slept() == Seq(100L, 200L, 400L))
+    } finally server.close()
   }
 
   test("interruption is cancellation: re-thrown immediately with interrupt status restored") {
