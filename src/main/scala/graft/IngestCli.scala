@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.odata.{HttpClient, ReplayClient, RetryingClient, StatlineIngest}
+import graft.sources.odata.{StatlineIngest, StatlineScanContext}
 
 /** CLI entry point (reference `statline-bq` command, cli.py:12-87).
   *
@@ -83,20 +83,7 @@ object IngestCli {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val client = replay match {
-      case Some(indexPath) =>
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val node = mapper.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(indexPath)))
-        val base = java.nio.file.Paths.get(indexPath).toAbsolutePath.getParent
-        val m = Map.newBuilder[String, String]
-        val it = node.fields()
-        while (it.hasNext) {
-          val e = it.next()
-          m += (e.getKey -> java.nio.file.Files.readString(base.resolve(e.getValue.asText())))
-        }
-        ReplayClient(m.result())
-      case None => RetryingClient(new HttpClient())
-    }
+    val client = StatlineScanContext.makeClient(replay)
 
     val ingest = new StatlineIngest(spark, client, source)
     datasets.foreach { id =>

@@ -24,7 +24,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * single-rowgroup parquet, and Spark cannot split inside a rowgroup — so
     * unstaged, every scan of the fact table is one task no matter how many
     * cores the host has. An ingest pipeline (ours included —
-    * `NdjsonToParquet` writes a file per fetched page) naturally produces
+    * `StatlineIngest` writes a file per fetched page) naturally produces
     * many files; staging reproduces that layout once per fixture.
     */
   def table(name: String): DataFrame = {

@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogDatabase, CatalogStorageFormat, CatalogTable, CatalogTableType, CatalogUtils}
+import org.apache.spark.sql.connector.catalog.SupportsNamespaces
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.NameRules
 
@@ -9,58 +12,56 @@ import graft.functions.NameRules
   * catalog: external-location parquet tables inside a per-dataset database,
   * with column descriptions as column comments (truncated per the
   * reference's 1023-char warehouse limit, statline.py:370-376).
+  *
+  * Every call goes straight to the session catalog, with the entries the
+  * equivalent SQL statement or `spark.catalog.createTable` would write: no
+  * query is parsed or planned and no file is listed.
   */
 object CatalogLoader {
 
-  /** Idempotent database create (A20): `CREATE DATABASE IF NOT EXISTS`. */
-  def createNamespace(spark: SparkSession, namespace: String, description: String): Unit =
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$namespace` COMMENT '${sqlEscape(description)}'")
+  /** Idempotent database create (A20), as `CREATE DATABASE IF NOT EXISTS`
+    * with a comment: the default location, the session user as owner.
+    */
+  def createNamespace(spark: SparkSession, namespace: String, description: String): Unit = {
+    val catalog = spark.sessionState.catalog
+    catalog.createDatabase(CatalogDatabase(namespace, description, catalog.getDefaultDBPath(namespace),
+      Map(SupportsNamespaces.PROP_OWNER -> spark.sparkContext.sparkUser)), ignoreIfExists = true)
+  }
 
   /** A21. */
   def namespaceExists(spark: SparkSession, namespace: String): Boolean =
-    spark.catalog.databaseExists(namespace)
+    spark.sessionState.catalog.databaseExists(namespace)
 
   /** Drop-cascade (A22) — the reference's always-drop-then-recreate flow. */
   def dropNamespace(spark: SparkSession, namespace: String): Unit =
-    spark.sql(s"DROP DATABASE IF EXISTS `$namespace` CASCADE")
+    spark.sessionState.catalog.dropDatabase(namespace, ignoreIfNotExists = true, cascade = true)
 
   /** External parquet table over a location (A23) with its column comments
-    * (A24), registered in one catalog statement — the Spark analog of a
-    * BigQuery external table whose schema descriptions the reference patches
-    * in one `update_table` call (gcpl.py:268-286).
+    * (A24), registered in one catalog call — the Spark analog of a BigQuery
+    * external table whose schema descriptions the reference patches in one
+    * `update_table` call (gcpl.py:268-286).
     *
-    * `schema` is the schema the files at `location` were written with, so
-    * the catalog does not infer it from the parquet footers (a Spark job per
-    * table); fields are registered nullable, as parquet stores them. Each
-    * description is cleaned/truncated with the reference's exact rule;
-    * descriptions of columns the table lacks, and null descriptions, are
-    * ignored. The table must not exist yet (its namespace is recreated
-    * before every load).
+    * `schema` is the flat schema the files at `location` were written with,
+    * so nothing reads the parquet footers; fields are registered nullable,
+    * as parquet stores them. Each description is cleaned/truncated with the
+    * reference's exact rule; descriptions of columns the table lacks, and
+    * null descriptions, are ignored. The table must not exist yet (its
+    * namespace is recreated before every load).
     */
   def registerExternalTable(spark: SparkSession, namespace: String, table: String,
                             location: String, schema: StructType,
                             descriptions: Map[String, String]): Unit = {
     val fields = schema.fields.map { f =>
-      val field = nullableField(f)
+      val field = f.copy(nullable = true)
       descriptions.get(f.name).flatMap(Option(_))
         .fold(field)(d => field.withComment(NameRules.cleanDescription(d)))
     }
-    spark.catalog.createTable(s"`$namespace`.`$table`", "parquet", StructType(fields),
-      Map("path" -> location))
+    spark.sessionState.catalog.createTable(CatalogTable(
+      identifier = TableIdentifier(table, Some(namespace)),
+      tableType = CatalogTableType.EXTERNAL,
+      storage = CatalogStorageFormat.empty.copy(
+        locationUri = Some(CatalogUtils.stringToURI(location)), properties = Map("path" -> location)),
+      schema = StructType(fields),
+      provider = Some("parquet")), ignoreIfExists = false)
   }
-
-  /** `f` with itself and every nested field, array element and map value
-    * nullable.
-    */
-  private def nullableField(f: StructField): StructField =
-    f.copy(dataType = nullable(f.dataType), nullable = true)
-
-  private def nullable(t: DataType): DataType = t match {
-    case s: StructType => StructType(s.fields.map(nullableField))
-    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
-    case other => other
-  }
-
-  private def sqlEscape(s: String): String = s.replace("\\", "\\\\").replace("'", "\\'")
 }

@@ -1,6 +1,10 @@
 package graft.sources.odata
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.EdmSchema
 
 /** URL construction, discovery and pagination semantics of the CBS OData
   * endpoints, matching the reference behavior exactly:
@@ -28,6 +32,44 @@ object ODataUrls {
   }
 
   def v4PropertiesUrl(id: String): String = s"${v4Base(id)}/Properties"
+
+  /** Raw catalog metadata document (statline.py:112-167): the v3 catalog
+    * entry or the v4 Properties document, kept as a tree so the Metadata
+    * sidecar preserves nested/null fields byte-faithfully.
+    */
+  def metadata(client: StatlineClient, id: String, odataVersion: String,
+               thirdParty: Boolean): JsonNode = {
+    val mapper = new ObjectMapper()
+    odataVersion match {
+      case "v3" =>
+        val doc = client.get(v3CatalogUrl(id, thirdParty)).getOrElse(
+          throw new NoSuchElementException(s"dataset $id not in catalog"))
+        val value = mapper.readTree(doc).get("value")
+        if (value == null || value.size() == 0)
+          throw new NoSuchElementException(s"dataset $id not in catalog")
+        value.get(0)
+      case _ =>
+        mapper.readTree(client.get(v4PropertiesUrl(id)).getOrElse(
+          throw new NoSuchElementException(s"dataset $id has no v4 Properties")))
+    }
+  }
+
+  /** The row count that drives a table's pagination: the catalog
+    * metadata's RecordCount (v3) or ObservationCount (v4) for the main
+    * table; None for the others, which are one page (and leave `metadata`
+    * unread).
+    */
+  def rowCount(metadata: => JsonNode, table: String, odataVersion: String): Option[Long] =
+    if (table != "TypedDataSet" && table != "Observations") None
+    else Option(metadata.get(if (odataVersion == "v3") "RecordCount" else "ObservationCount"))
+      .filter(!_.isNull).map(_.asLong())
+
+  /** The v3 main table's declared schema, from the CSDL `$metadata`
+    * document beside the table (statline.py:241-308).
+    */
+  def csdlSchema(client: StatlineClient, rawTableUrl: String): Option[StructType] =
+    client.get(rawTableUrl.split('?').head.reverse.dropWhile(_ != '/').reverse + "$metadata")
+      .flatMap(EdmSchema.fromCsdl(_, "TData"))
 
   /** Version probe (statline.py:15-48): third-party is always v3; otherwise
     * v4 iff the v4 root responds.

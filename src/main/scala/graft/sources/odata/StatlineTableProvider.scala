@@ -4,15 +4,15 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 connector for a CBS Statline table (SURVEY M4):
   *
@@ -32,7 +32,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `SupportsPushDownRequiredColumns`: column pruning reaches the
   *    connector, so partition readers convert only requested fields;
   *  - the v3 main-table schema is declared from CSDL (A9), everything else
-  *    first-page inferred (A8).
+  *    inferred from the first page that holds rows (A8); pages are read,
+  *    inferred and converted by [[ODataRows]], as in the ingest.
   *
   * The wire client is reconstructed per partition from options (replay index
   * file or live HTTP) because V2 options are strings — partitions must not
@@ -67,7 +68,7 @@ private[odata] final case class StatlineScanContext(
   }
 }
 
-private[odata] object StatlineScanContext {
+private[graft] object StatlineScanContext {
 
   // Spark calls inferSchema and getTable back-to-back with the same options;
   // resolution costs ~5 network round trips, so memoize per options map
@@ -76,9 +77,12 @@ private[odata] object StatlineScanContext {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[Map[String, String], StatlineScanContext]()
 
-  def resolve(opts: Map[String, String]): StatlineScanContext =
+  private[odata] def resolve(opts: Map[String, String]): StatlineScanContext =
     cache.computeIfAbsent(opts, fromOptions)
 
+  /** A replay client over a JSON index of url → payload file (paths
+    * relative to the index), or the live client.
+    */
   def makeClient(replayIndex: Option[String]): StatlineClient = replayIndex match {
     case Some(path) =>
       val mapper = new ObjectMapper()
@@ -94,7 +98,7 @@ private[odata] object StatlineScanContext {
     case None => RetryingClient(new HttpClient())
   }
 
-  def fromOptions(opts: Map[String, String]): StatlineScanContext = {
+  private[odata] def fromOptions(opts: Map[String, String]): StatlineScanContext = {
     val id = opts.getOrElse("id", sys.error("option 'id' is required"))
     val tableName = opts.getOrElse("table", sys.error("option 'table' is required"))
     val thirdParty = opts.get("thirdparty").orElse(opts.get("thirdParty")).exists(_.toBoolean)
@@ -107,58 +111,15 @@ private[odata] object StatlineScanContext {
       sys.error(s"table $tableName not in dataset $id (has: ${tables.keys.mkString(", ")})"))
     val url = if (version == "v3") s"$rawUrl?$$format=json" else rawUrl
 
-    // row count (pagination driver) comes from catalog metadata for main tables
-    val nRecords: Option[Long] =
-      if (Set("TypedDataSet", "Observations")(tableName)) {
-        val mapper = new ObjectMapper()
-        val meta = version match {
-          case "v3" =>
-            val doc = client.get(ODataUrls.v3CatalogUrl(id, thirdParty)).get
-            mapper.readTree(doc).get("value").get(0)
-          case _ => mapper.readTree(client.get(ODataUrls.v4PropertiesUrl(id)).get)
-        }
-        val field = if (version == "v3") "RecordCount" else "ObservationCount"
-        Option(meta.get(field)).filter(!_.isNull).map(_.asLong())
-      } else None
+    val nRecords = ODataUrls.rowCount(ODataUrls.metadata(client, id, version, thirdParty), tableName, version)
 
-    val schema: StructType = {
-      val declared =
-        if (version == "v3" && tableName == "TypedDataSet") {
-          val csdlUrl = rawUrl.split('?').head.reverse.dropWhile(_ != '/').reverse + "$metadata"
-          client.get(csdlUrl).flatMap(xml => graft.sources.EdmSchema.fromCsdl(xml, "TData"))
-        } else None
-      declared.getOrElse(inferFromFirstPage(client, url))
-    }
-    StatlineScanContext(url, nRecords, version, schema, replayIndex)
-  }
-
-  /** First-page inference (A8) over the primitive types OData emits. */
-  private def inferFromFirstPage(client: StatlineClient, url: String): StructType = {
-    val mapper = new ObjectMapper()
-    val payload = client.get(url).getOrElse(sys.error(s"empty table at $url"))
-    val value = mapper.readTree(payload).get("value")
-    require(value != null && value.size() > 0, s"cannot infer schema of empty table $url")
-    val fields = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
-    (0 until value.size()).foreach { i =>
-      val row = value.get(i)
-      row.fields().asScala.foreach { e =>
-        val t: DataType = e.getValue match {
-          case v if v.isNull => NullType
-          case v if v.isBoolean => BooleanType
-          case v if v.isIntegralNumber => LongType
-          case v if v.isNumber => DoubleType
-          case _ => StringType
-        }
-        fields.get(e.getKey) match {
-          case None | Some(NullType) => fields(e.getKey) = t
-          case Some(LongType) if t == DoubleType => fields(e.getKey) = DoubleType
-          case _ => // keep first non-null type
-        }
+    val schema = (if (version == "v3" && tableName == "TypedDataSet") ODataUrls.csdlSchema(client, rawUrl) else None)
+      .getOrElse {
+        val (_, rows) = ODataRows.firstRows(client, ODataUrls.pageUrls(url, nRecords, version))
+          .getOrElse(sys.error(s"cannot infer the schema of $url: no page holds rows"))
+        ODataRows.inferSchema(rows)
       }
-    }
-    StructType(fields.map { case (n, t) =>
-      StructField(n, if (t == NullType) StringType else t)
-    }.toSeq)
+    StatlineScanContext(url, nRecords, version, schema, replayIndex)
   }
 }
 
@@ -242,68 +203,27 @@ private[odata] class StatlineScan(schema: StructType, ctx: StatlineScanContext,
   override def planInputPartitions(): Array[InputPartition] =
     ctx.pageUrls(odataFilter).map(u => StatlinePagePartition(u): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new StatlinePageReaderFactory(schema, ctx.replayIndex)
+    new StatlinePageReaderFactory(
+      new ODataRows.Converter(schema, SQLConf.get.sessionLocalTimeZone), ctx.replayIndex)
 }
 
 private[odata] final case class StatlinePagePartition(url: String) extends InputPartition
 
-private[odata] class StatlinePageReaderFactory(schema: StructType,
+/** Executor-side: fetch one page, convert its rows over the (pruned)
+  * schema. (Legitimately over-covering filtered pagination returns 200 +
+  * empty `value`.)
+  */
+private[odata] class StatlinePageReaderFactory(convert: ODataRows.Converter,
     replayIndex: Option[String]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val page = partition.asInstanceOf[StatlinePagePartition]
-    new StatlinePageReader(page.url, schema, replayIndex)
-  }
-}
-
-/** Executor-side: fetch one page, convert `value` rows to InternalRow over
-  * the (pruned) schema.
-  */
-private[odata] class StatlinePageReader(url: String, schema: StructType,
-    replayIndex: Option[String]) extends PartitionReader[InternalRow] {
-
-  private val rows: Iterator[JsonNode] = {
-    val client = StatlineScanContext.makeClient(replayIndex)
-    client.get(url) match {
-      // A 404/absent FIRST page is an absent-or-empty table (expected: the
-      // version probe and empty-table skip rely on it). A missing mid-
-      // pagination `$skip` page is a gap — an empty result here would be a
-      // silently truncated scan, so fail loudly instead. (Legitimately
-      // over-covering filtered pagination returns 200 + empty `value`.)
-      case None if url.contains("$skip=") =>
-        throw new java.io.IOException(s"missing pagination page: $url")
-      case None => Iterator.empty
-      case Some(payload) =>
-        val v = new ObjectMapper().readTree(payload).get("value")
-        if (v == null || !v.isArray) Iterator.empty
-        else (0 until v.size()).iterator.map(v.get)
+    val url = partition.asInstanceOf[StatlinePagePartition].url
+    val rows = ODataRows.page(StatlineScanContext.makeClient(replayIndex), url).iterator
+      .flatMap(convert(_, url))
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean = rows.hasNext && { current = rows.next(); true }
+      override def get(): InternalRow = current
+      override def close(): Unit = ()
     }
-  }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (rows.hasNext) { current = convert(rows.next()); true } else false
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = ()
-
-  private def convert(node: JsonNode): InternalRow = {
-    val values = schema.fields.map { f =>
-      val v = node.get(f.name)
-      if (v == null || v.isNull) null
-      else f.dataType match {
-        case StringType  => UTF8String.fromString(if (v.isTextual) v.asText() else v.toString)
-        case LongType    => java.lang.Long.valueOf(v.asLong())
-        case IntegerType => java.lang.Integer.valueOf(v.asInt())
-        case ShortType   => java.lang.Short.valueOf(v.shortValue())
-        case ByteType    => java.lang.Byte.valueOf(v.numberValue().byteValue())
-        case DoubleType  => java.lang.Double.valueOf(v.asDouble())
-        case FloatType   => java.lang.Float.valueOf(v.floatValue())
-        case BooleanType => java.lang.Boolean.valueOf(v.asBoolean())
-        case _           => UTF8String.fromString(v.toString) // conservative fallback
-      }
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
   }
 }

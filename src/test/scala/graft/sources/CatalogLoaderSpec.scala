@@ -55,20 +55,4 @@ class CatalogLoaderSpec extends AnyFunSuite {
       == "83583NED_TypedDataSet")
   }
 
-  test("A7: ndjson → parquet with declared schema round-trips") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ndjson_test")
-    val nd = tmp.resolve("page0.ndjson")
-    java.nio.file.Files.writeString(nd,
-      """{"ID": 1, "Perioden": "2018JJ00", "Banen_1": 10.5}
-        |{"ID": 2, "Perioden": "2019JJ00", "Banen_1": null}
-        |""".stripMargin)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "ID INT, Perioden STRING, Banen_1 DOUBLE")
-    val out = tmp.resolve("out").toString
-    NdjsonToParquet.convert(spark, tmp.toString + "/page0.ndjson", out, Some(schema), coalesceTo = Some(1))
-    val back = spark.read.parquet(out)
-    assert(back.schema == schema)
-    assert(back.count() == 2)
-    assert(back.filter("Banen_1 IS NULL").count() == 1)
-  }
 }

@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -181,23 +182,32 @@ class StatlineIngestSpec extends AnyFunSuite {
     }
   }
 
-  test("catalog ingest: a job per declared table, two per inferred, none per empty; no ALTERs") {
+  test("catalog ingest: one job per written table, none per empty; every page fetched once; only the writes are commands") {
     val root = Files.createTempDirectory("graft_ingest_jobs").toString
     val date = LocalDate.of(2024, 3, 1)
+    CountingClient.urls.clear()
     val (v3, v3Jobs, v3Commands) = counted(
-      new StatlineIngest(spark, ReplayClient(v3Fixture("2024-01-01T00:00:00")))
+      new StatlineIngest(spark, CountingClient(ReplayClient(v3Fixture("2024-01-01T00:00:00"))))
         .run(id, root, endpoint = "catalog", date = date))
-    // TypedDataSet declared (the write); DataProperties and Perioden
-    // inferred (inference + write); CategoryGroups a single empty page
-    assert(v3Jobs == 1 + 2 + 2)
+    // TypedDataSet (two pages), DataProperties and Perioden: one write job
+    // each; CategoryGroups a single empty page
+    assert(v3Jobs == 3)
+    // driver probes, executor pages and the ColDescriptions sidecar share
+    // their fetches: no url is requested twice
+    val fetched = CountingClient.urls.asScala.toSeq
+    assert(fetched.size == fetched.distinct.size, fetched.diff(fetched.distinct))
     val (v4, v4Jobs, v4Commands) = counted(
       new StatlineIngest(spark, ReplayClient(v4Fixture))
         .run(v4Id, root, endpoint = "catalog", date = date))
-    assert(v4Jobs == 2 + 2) // Observations and MeasureCodes inferred
-    // drop + create namespace, then one write and one registration per table
+    assert(v4Jobs == 2) // Observations and MeasureCodes
+    // the catalog step plans no command: only the parquet writes are
     Seq(v3 -> v3Commands, v4 -> v4Commands).foreach { case (res, commands) =>
-      assert(!commands.exists(_.contains("Alter")), commands)
-      assert(commands.size == 2 + 2 * res.parquetPaths.size, commands)
+      assert(commands == Seq.fill(res.parquetPaths.size)("InsertIntoHadoopFsRelationCommand"), commands)
+    }
+    // one file per page that holds rows
+    Seq(v3, v4).flatMap(_.parquetPaths).foreach { path =>
+      val files = new java.io.File(path).list().count(_.endsWith(".parquet"))
+      assert(files == (if (path.endsWith("_TypedDataSet.parquet")) 2 else 1), path)
     }
 
     // every registered table has the schema its files were written with
@@ -215,6 +225,79 @@ class StatlineIngestSpec extends AnyFunSuite {
     assert(main("ID").getComment().isEmpty)
     CatalogLoader.dropNamespace(spark, s"cbs_v3_$id")
     CatalogLoader.dropNamespace(spark, s"cbs_v4_$v4Id")
+  }
+
+  test("the catalog holds the entries CREATE DATABASE and spark.catalog.createTable would make") {
+    val root = Files.createTempDirectory("graft_ingest_catalog").toString
+    val res = new StatlineIngest(spark, ReplayClient(v3Fixture("2024-01-01T00:00:00")))
+      .run(id, root, endpoint = "catalog", date = LocalDate.of(2024, 3, 1))
+    val ns = s"cbs_v3_$id"
+    val catalog = spark.sessionState.catalog
+    val database = catalog.getDatabaseMetadata(ns)
+    val tables = res.parquetPaths.map { path =>
+      val table = TableIdentifier(StatlineLayout.warehouseTableId(path.split('/').last), Some(ns))
+      (table, path, catalog.getTableMetadata(table))
+    }
+    spark.sql(s"DROP DATABASE `$ns` CASCADE")
+    spark.sql(s"CREATE DATABASE `$ns` COMMENT 'a test set'")
+    assert(catalog.getDatabaseMetadata(ns) == database)
+    tables.foreach { case (table, path, registered) =>
+      spark.catalog.createTable(s"`$ns`.`${table.table}`", "parquet", registered.schema,
+        Map("path" -> path))
+      val made = catalog.getTableMetadata(table)
+      assert(made == registered.copy(createTime = made.createTime))
+      assert(registered.storage.properties == Map("path" -> path))
+    }
+    CatalogLoader.dropNamespace(spark, ns)
+  }
+
+  /** The schema the ingest wrote before driver-side inference:
+    * `spark.read.json` over all of a table's rows, reordered to the first
+    * row's fields, the inferred-only ones after.
+    */
+  private def sparkInferred(pages: Seq[String]): StructType = {
+    import spark.implicits._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val rows = pages.flatMap(p => mapper.readTree(p).get("value").elements().asScala.map(_.toString))
+    val inferred = spark.read.json(rows.toDS())
+    val first = mapper.readTree(rows.head).fieldNames().asScala.toSeq
+    val order = first.filter(inferred.columns.toSet) ++ inferred.columns.filterNot(first.toSet)
+    StructType(order.map(n => inferred.schema(n)))
+  }
+
+  test("first-page inference equals spark.read.json's wire-ordered schema") {
+    def tablePages(fixture: Map[String, String], prefix: String) =
+      fixture.filter { case (url, body) => url.startsWith(prefix) && body.startsWith("""{"odata.metadata"""") }
+        .groupBy { case (url, _) => url.split("[?&]\\$skip").head }
+        .map { case (table, pages) => table -> pages.toSeq.sortBy(_._1.length).map(_._2) }
+    val fixtures = tablePages(v3Fixture("2024-01-01T00:00:00"), v3Base) ++ tablePages(v4Fixture, v4Base)
+    val r = new scala.util.Random(7)
+    def money = if (r.nextDouble() < 0.03) "null" else "%.2f".formatLocal(java.util.Locale.ROOT, r.nextDouble() * 100)
+    // benchmark-shaped rows: ints, strings, two-decimal doubles with nulls,
+    // an all-null column, int+double mixes, booleans, a dotted name, and a
+    // field only later rows hold
+    val bench = Seq(page((0 until 500).map { i =>
+      s"""{"ID":$i,"RegioS":"GM${i % 40}","Perioden":"${1995 + i % 30}JJ00","Topic0_1":$money,""" +
+        s""""Topic1_2":$money,"StringValue":null,"Value":${if (i % 2 == 0) i else s"$i.5"},""" +
+        s""""Flag":${i % 3 == 0},"odata.type":"Cbs.Topic"${if (i > 0) s""","Late":$i""" else ""}}"""
+    }: _*))
+    (fixtures.values.filter(_.exists(!_.contains(""""value":[]"""))) ++ Seq(bench)).foreach { pages =>
+      val probe = ReplayClient(pages.zipWithIndex.map { case (p, i) => s"u$i" -> p }.toMap)
+      val (_, rows) = ODataRows.firstRows(probe, pages.indices.map(i => s"u$i")).get
+      val expected = sparkInferred(pages)
+      assert(ODataRows.inferSchema(rows) == expected, pages.head.take(200))
+    }
+  }
+
+  test("a value that does not fit its declared type fails the ingest with the column and page") {
+    val skipUrl = s"$v3Base/TypedDataSet?$$format=json&$$skip=10000"
+    val bad = v3Fixture("2024-01-01T00:00:00") +
+      (skipUrl -> page("""{"ID":3,"Perioden":"2019JJ00","Banen_1":"n/a"}"""))
+    val e = intercept[Exception](new StatlineIngest(spark, ReplayClient(bad))
+      .run(id, Files.createTempDirectory("graft_ingest_misfit").toString, date = LocalDate.of(2024, 3, 1)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(t =>
+      String.valueOf(t.getMessage).contains("column Banen_1:") &&
+        String.valueOf(t.getMessage).contains(skipUrl)), e)
   }
 
   test("a re-ingest with a page gap throws after all its chains end; the catalog keeps the old snapshot") {
@@ -321,4 +404,16 @@ final case class SlowClient(inner: StatlineClient, slowUrl: String) extends Stat
 
 object SlowClient {
   val inFlight = new AtomicInteger
+}
+
+/** Records every url fetched, across all copies of the client. */
+final case class CountingClient(inner: StatlineClient) extends StatlineClient {
+  override def get(url: String): Option[String] = {
+    CountingClient.urls.add(url)
+    inner.get(url)
+  }
+}
+
+object CountingClient {
+  val urls = new ConcurrentLinkedQueue[String]
 }

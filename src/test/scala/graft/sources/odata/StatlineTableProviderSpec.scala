@@ -2,6 +2,8 @@ package graft.sources.odata
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -194,5 +196,39 @@ class StatlineTableProviderSpec extends AnyFunSuite {
       StructField("Key", StringType), StructField("Title", StringType),
       StructField("Volgnr", LongType))))
     assert(df.count() == 1)
+  }
+
+  test("DSv2: declared Decimal, DateTime and Date columns read as spark.read.json reads them") {
+    val dir = Files.createTempDirectory("graft_dsv2_types")
+    val typedUrl = s"$base/TypedDataSet?$$format=json"
+    val rows = """[{"ID":1,"Bedrag":12.34,"Tijdstip":"2024-01-02T03:04:05","Dag":"2024-01-02"},""" +
+      """{"ID":2,"Bedrag":null,"Tijdstip":null,"Dag":null}]"""
+    val payloads = Map(
+      s"https://opendata.cbs.nl/ODataCatalog/Tables?$$format=json&$$filter=Identifier eq '$id'" ->
+        s"""{"value":[{"Identifier":"$id","Modified":"2024-01-01","RecordCount":2,"ColumnCount":4}]}""",
+      s"$base?$$format=json" -> s"""{"value":[{"name":"TypedDataSet","url":"$base/TypedDataSet"}]}""",
+      s"$base/$$metadata" -> (
+        """<edmx:Edmx xmlns:edmx="x"><edmx:DataServices><Schema xmlns="y"><EntityType Name="TData">""" +
+        """<Property Name="ID" Type="Edm.Int32"/><Property Name="Bedrag" Type="Edm.Decimal" Precision="10" Scale="2"/>""" +
+        """<Property Name="Tijdstip" Type="Edm.DateTime"/><Property Name="Dag" Type="Edm.Date"/>""" +
+        """</EntityType></Schema></edmx:DataServices></edmx:Edmx>"""),
+      typedUrl -> s"""{"value":$rows}""")
+    val index = payloads.zipWithIndex.map { case ((url, content), i) =>
+      Files.writeString(dir.resolve(s"t$i.json"), content)
+      s""""${url.replace("\"", "\\\"")}": "t$i.json""""
+    }.mkString("{", ",", "}")
+    Files.writeString(dir.resolve("index.json"), index)
+    val df = spark.read.format("graft.sources.odata.StatlineTableProvider")
+      .option("id", id).option("table", "TypedDataSet")
+      .option("replayIndex", dir.resolve("index.json").toString)
+      .load()
+    assert(df.schema.map(_.dataType) == Seq(IntegerType, DecimalType(10, 2), TimestampType, DateType))
+    import spark.implicits._
+    val viaJson = spark.read.schema(df.schema).json(
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(rows).elements()
+        .asScala.map(_.toString).toSeq.toDS())
+    val read = df.orderBy("ID").collect().toSeq
+    assert(read == viaJson.orderBy("ID").collect().toSeq)
+    assert(read.head.getDecimal(1) == new java.math.BigDecimal("12.34"))
   }
 }
