@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   * with a cold [[Tables]] read cache — measured ~1.3 s per call at the
   * sf1 point (Q81ShapeProbe: clone-per-call 2.92 s vs reused-clone
   * 1.62 s end-to-end). One clone per (caller, posture) amortizes that to
-  * zero across repeated calls, which is exactly the bench's fresh-plan
-  * methodology and any real pipeline's steady state.
+  * zero across repeated calls, which is exactly a fresh-plan
+  * benchmark's methodology and any real pipeline's steady state.
   *
   * Why a clone at all: the scoped posture must never touch the CALLER's
   * session conf — a concurrent query planned on the same session would

@@ -62,7 +62,7 @@ import org.apache.spark.sql.functions.col
   * single-partition walls, q04 within noise) to never serialize a
   * fact-sized output through one partition (q10 −10.9 s, q03 −0.5 s,
   * q05 −0.5 s, q27 −0.5 s, q18/q19/q29/q37/q90 each −0.1…−0.6 s). The full
-  * two-mode measurement table is committed in `SORT_THRESHOLD.json`
+  * two-mode measurement table is committed in `7ec77e8:SORT_THRESHOLD.json`
   * (tools: SortRuleCalibrate + SortModeProbe, r15).
   *
   * The threshold is MEASURED, not guessed: at the sf1 calibration point
@@ -80,7 +80,7 @@ import org.apache.spark.sql.functions.col
   */
 object Present {
   /** Measured range-vs-merge crossover in un-reduced fan-in rows (see
-    * scaladoc above; calibration committed in SORT_THRESHOLD.json).
+    * scaladoc above; calibration committed in 7ec77e8:SORT_THRESHOLD.json).
     * `spark.graft.rangeSortRows` overrides per session (deployments with
     * different executor-to-data ratios recalibrate; the shape spec uses it
     * to pin both shapes at test scale).

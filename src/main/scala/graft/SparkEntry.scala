@@ -26,17 +26,15 @@ object SparkEntry {
     */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    // AQE on by default (runtime coalescing + skew splitting is the at-scale
-    // posture); SPARK_GRAFT_AQE=false lets the bench isolate its per-stage
-    // scheduling cost on tiny inputs.
-    "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true"),
+    // AQE on (runtime coalescing + skew splitting is the at-scale posture).
+    "spark.sql.adaptive.enabled" -> "true",
     // (Measured: forcing size-based AQE coalescing — parallelismFirst=false
     // — serializes genuinely parallel work at bench scale for no net win;
     // the default, which only merges empty/sub-minPartitionSize reads,
     // stays.)
     "spark.sql.session.timeZone" -> "UTC",
     // The JVM-wide codegen class cache defaults to 100 entries; a workload
-    // that cycles through the full operator surface (Verify/Bench: 69
+    // that cycles through the full operator surface (Verify: 69
     // queries x several codegen units each) evicts constantly and pays a
     // Janino recompile (~50-100ms) per unit per query. Identical generated
     // source should compile once per JVM.
@@ -128,10 +126,10 @@ object SparkEntry {
     cached(planBuilderFamilies) ++ executingFamilies
 
   /** The same surface with NO plan cache: every call builds a fresh plan.
-    * The bench measures through this so each timed run pays the full
-    * plan-build + optimize + execute pipeline — re-executing a cached AQE
-    * plan would silently REUSE its materialized shuffle stages and report
-    * final-stage-only latency.
+    * Timed callers (`perfbench`, `StreamBudget`) measure through this so
+    * each timed run pays the full plan-build + optimize + execute
+    * pipeline — re-executing a cached AQE plan would silently REUSE its
+    * materialized shuffle stages and report final-stage-only latency.
     */
   def freshQueries: Map[String, (SparkSession, String) => DataFrame] =
     planBuilderFamilies ++ executingFamilies

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Greedy ordered-funnel stage per group — the native form of q102's
   * `aggregate(sort_array(collect_list(struct(ts, tb, tp))), …)` fold
-  * (round 16; Q102_DECOMP.json put 0.32 s of the 0.58 s wall in the entity
+  * (round 16; 568e947:Q102_DECOMP.json put 0.32 s of the 0.58 s wall in the entity
   * exchange + per-entity struct-array sort, with the HOF fold itself free).
   *
   * `graft_funnel_stage(ts_us, step_idx, window_us)` packs each event into

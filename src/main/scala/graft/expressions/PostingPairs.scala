@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
 
 /** All ascending (a < b positionally) pair combinations of a group's k
   * smallest BIGINT values, each packed into ONE long `(a << 32) | b` — the
-  * fused form of q134's posting stage (round 17; `Q134_DECOMP.json` put
+  * fused form of q134's posting stage (round 17; `ba7cbbe:Q134_DECOMP.json` put
   * 0.32 s of the 0.61 s wall in the posting aggregate + pair-emission
   * stages over ~10⁵ tiny rows, the same per-stage machinery the q102
   * packed-long fold eliminated for an identical exchange+fold shape):

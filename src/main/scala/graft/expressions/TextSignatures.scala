@@ -142,7 +142,7 @@ object TextSignatures {
     * Tokenization is the engine's `split(trim(text), " +")` contract
     * (0x20 runs, not general whitespace). A single-token doc emits its
     * lone token as the degenerate bigram (the `greatest(n-1, 1)` window
-    * contract shared with [[graft.operators.Curation.wordNgramsOfTokens]]
+    * contract shared with [[graft.operators.Curation.wordNgrams]]
     * and the q123 oracle) — tagged [[FamBigram]], so it counts as a
     * bigram, never as a token occurrence (the r13 'family by
     * contains-a-space' inference mis-filed it; ADVICE r13).

@@ -68,7 +68,7 @@ object VectorFunctions {
 
   /** Session-less variant for pure Column-builder helpers: registers
     * against the thread's active session (always set by the time a query
-    * builder runs — Verify/Bench/tests create the session first).
+    * builder runs — Verify, perfbench and the tests create the session first).
     */
   def roundNative(c: Column, scale: Int): Column =
     roundNative(org.apache.spark.sql.SparkSession.active)(c, scale)

@@ -12,7 +12,7 @@ import graft.Present._
   * the reference's "latest snapshot" resolution (gcpl.py:93-96) generalizes
   * to, and a staple of time-series/feature-store pipelines.
   *
-  * Implementation (r19, promoted by `Q37_PROBE_AB.json` after the shipped
+  * Implementation (r19, promoted by `e39dd78:Q37_PROBE_AB.json` after the shipped
   * r15 shape measured 2.758 s vs 2.481/2.080 s med-of-7 at sf1): a RANGE
   * frame with a running `max(struct(ts, tiebreak, value))` — NOT a range
   * join, and no longer the union + dedup + `last(ignoreNulls)` formulation:

@@ -72,18 +72,6 @@ object Curation {
     expr(s"""transform(sequence(1, greatest(size(split(trim($textCol), ' +')) - ${n - 1}, 1)),
                        i -> concat_ws(' ', slice(split(trim($textCol), ' +'), i, $n)))""")
 
-  /** [[wordNgrams]] over an already-tokenized array column. Callers that
-    * hoist `split(trim(text), ' +')` into its OWN projection evaluate the
-    * regex split once per row; the inline-`split` form above re-splits
-    * inside the transform lambda, once per gram index (CollapseProject
-    * keeps a non-cheap alias referenced twice in a separate project, so
-    * the hoisting sticks).
-    */
-  def wordNgramsOfTokens(toks: Column, n: Int): Column =
-    transform(
-      sequence(lit(1), greatest(size(toks) - lit(n - 1), lit(1))),
-      i => concat_ws(" ", slice(toks, i, lit(n))))
-
   /** Train/holdout contamination: training docs that share at least one
     * word-`n`-gram with the holdout set, with the count of distinct shared
     * grams. The holdout side is DISTINCT grams and broadcast — a benchmark

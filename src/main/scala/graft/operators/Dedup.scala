@@ -118,7 +118,7 @@ object Dedup {
     * verify against each other like any other pairing; `duplicateClusters`
     * closes the chain transitively). The caps default far above any
     * organically-occurring bucket (measured at 500k ciphered docs —
-    * `SCALE100.json` `bucket_histograms`: minhash band max 26, simhash
+    * `53724f9:SCALE100.json` `bucket_histograms`: minhash band max 26, simhash
     * chunk max 752 and flattening, embedding bucket max 20 at sf0.1 —
     * hence 1024 defaults, 4096 for the deliberately-dense simhash
     * chunks), so certified outputs are unchanged — the bound exists for
@@ -450,7 +450,7 @@ object Dedup {
     // replaces the transform/slice/concat_ws composition — the q123/q75
     // higher-order-function finding applied here too
     // Storage posture is MEASURED, gated, and conf-overridable
-    // (Q115_PERSIST_AB.json, r16): the gram cache is the dedup family's
+    // (f2aa3f5:Q115_PERSIST_AB.json, r16): the gram cache is the dedup family's
     // only input-sized persist, and the sweep shows it is scale-LOCAL —
     // at the sf1-scale corpus (5.9 MB at rest) MEMORY_AND_DISK wins ~9%
     // over recompute (4.46 vs 4.86 s med), but at the 10× decade (57 MB
@@ -491,7 +491,7 @@ object Dedup {
     }
     val ex = g.select(col(keyCol), explode(col("g")).as("sh"))
     // r15 candidate-stage reshape, each step measured (Q115Legs /
-    // Q115_JOIN_AB.json / Q115_SHAPE_AB.json, rows asserted identical
+    // a63a540:Q115_JOIN_AB.json / a63a540:Q115_SHAPE_AB.json, rows asserted identical
     // throughout):
     //  - ONE shingle aggregate emits BOTH the document frequency and the
     //    capped posting list (graft_smallest_k bounded heap — map-side
@@ -789,7 +789,7 @@ object Dedup {
       .observe(eObs, count(lit(1)).as("n"))
       .localCheckpoint(true)
     val edgeCount = eObs.get("n").asInstanceOf[Long]
-    // Tier 0 (round 16, Q85_DECOMP.json): a MEASURED-tiny edge list is
+    // Tier 0 (round 16, d3c6073:Q85_DECOMP.json): a MEASURED-tiny edge list is
     // closed on the driver with union-find — the broadcast-join move
     // (Spark itself collects a measured-small join side to the driver).
     // The decomposition showed the loop below is already at its algorithmic
@@ -962,7 +962,7 @@ object Dedup {
   }
 
   /** Deployment form of duplicate resolution (round 14, the
-    * topVocab/vocabOovScore split pattern): in a steady-state pipeline the
+    * topVocab/vocabOovScoreLocal split pattern): in a steady-state pipeline the
     * per-doc quality score is a MAINTAINED artifact (scored once when the
     * doc is ingested — the q119 incremental pattern), so a resolution run
     * pays only cluster the pairs + join scores + per-cluster keep window,

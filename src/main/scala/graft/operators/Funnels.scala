@@ -80,7 +80,7 @@ object Funnels {
                    typeCol: String, tiebreakCol: String,
                    steps: Seq[String], windowUs: Long,
                    includeStepless: Boolean = false): DataFrame = {
-    // NATIVE walk (round 16, Q102_DECOMP.json): of q102's 0.58 s sf1 wall,
+    // NATIVE walk (round 16, 568e947:Q102_DECOMP.json): of q102's 0.58 s sf1 wall,
     // 0.32 s was the entity exchange + per-entity
     // sort_array(collect_list(struct(ts, tb, tp))) and the HOF fold itself
     // was free — so the struct array is the cost, not the walk. The
@@ -90,7 +90,7 @@ object Funnels {
     // dropped outright — the strict-> guard makes the walk's result
     // invariant to equal-ts order, see the expression scaladoc), and a
     // primitive sort at eval. The seven-for-seven native-beats-HOF rule
-    // holds (leg A/B in Q102_DECOMP.json). Packing bounds (<=255 steps,
+    // holds (leg A/B in 568e947:Q102_DECOMP.json). Packing bounds (<=255 steps,
     // ts in [0, 2^55)) are the expression's documented contract; this
     // operator's step list is always tiny.
     require(steps.size <= 255, "funnelStages: step list exceeds the packing bound")

@@ -195,7 +195,7 @@ object Multimodal {
     // into ONE eval (native graft_posting_pairs; was graft_smallest_k +
     // size filter + nested HOF transforms + struct explode), emitting
     // packed `(a<<32)|b` longs so the pair-count exchange keys on a single
-    // primitive long (Q134_FUSE_AB.json: 1.27× on the full sf1 wall, rows
+    // primitive long (6b33a9f:Q134_FUSE_AB.json: 1.27× on the full sf1 wall, rows
     // identical). The shuffle payload stays O(k) — the map-side partial
     // ships at most k postings per bucket (the r15/ADVICE-r14 bound) —
     // while the final eval materializes at most C(k,2) packed longs per

@@ -64,7 +64,7 @@ object Pipeline {
     // (pairs are generated only over that slice), so the resolution leg is
     // pruned to the bound BEFORE scoring — the old shape scored the WHOLE
     // corpus (a second full langid+scrub+stats pass, plan scan (9) in
-    // plans/r19/q136_before.txt) just to inner-join it down to <= 41
+    // be7f2a2:plans/r19/q136_before.txt) just to inner-join it down to <= 41
     // cluster rows. Identical result: resolveDuplicates' inner join kept
     // only clustered (<= PairBound) keys either way, and per-doc scores
     // don't depend on other rows.

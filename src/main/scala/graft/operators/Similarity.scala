@@ -551,38 +551,9 @@ object Similarity {
       .parquet(ivfSegmentBase(spark, tag).resolve(s"b$batchId").toString)
   }
 
-  /** Diagnostic twin of [[searchIvfIndex]] truncated before the top-k —
-    * exposes the scored candidate stream so a profile can separate the
-    * per-pair scoring cost from the heap aggregation (IvfSearchProfile).
-    */
-  private[graft] def scoredPairsForProfile(spark: SparkSession, queries: DataFrame,
-                                           keyCol: String, vecCol: String,
-                                           tag: String, nprobe: Int = 4): DataFrame = {
-    val (centTbl, cellsTbl) = ivfArtifactNames(tag)
-    val cos = VectorFunctions.cosineNative(spark) _
-    val dot = VectorFunctions.dotNative(spark) _
-    val nrm = VectorFunctions.normNative(spark)(_)
-    val rnd = VectorFunctions.roundNative(spark) _
-    val cent = spark.table(centTbl)
-    val probes = topKPerGroup(
-      queries.select(col(keyCol).as("q_id"), col(vecCol))
-        .join(broadcast(cent))
-        .select(col("q_id"), col("cent_id"),
-          rnd(cos(col(vecCol), col("cvec")), 6).as("s")),
-      "q_id", "s", "cent_id", nprobe)
-      .select(col("q_id"), col("cent_id"))
-    probes
-      .join(queries.select(col(keyCol).as("q_id"), col(vecCol).as("qv"),
-        nrm(col(vecCol)).as("qn")), "q_id")
-      .join(spark.table(cellsTbl), "cent_id")
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id").as("n_id"),
-        rnd(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("sim"))
-  }
-
   /** Diagnostic: the candidate volume a [[searchIvfIndex]] at these
     * parameters scores — the probe list expanded against the cells, before
-    * top-k. What the `SCALE_IVF.json` sweep records next to wall time.
+    * top-k. What the `f443513:SCALE_IVF.json` sweep records next to wall time.
     */
   def searchCandidateCount(spark: SparkSession, queries: DataFrame,
                            keyCol: String, vecCol: String, tag: String,

@@ -209,7 +209,7 @@ object TextAnalysis {
     // the native graft_word_bigrams expression (one fused per-row fold, no
     // sequence/lambda machinery — the q123/q75/q53/q117 finding applied to
     // the bigram stream; parity pinned by WordLinesTermTfsSpec, leg A/B in
-    // BIGRAM_NATIVE_AB.json). The >=2-token guard stays: it matches the
+    // 97ff426:BIGRAM_NATIVE_AB.json). The >=2-token guard stays: it matches the
     // expression's no-pairs contract for short docs and keeps the plan's
     // scan shape unchanged.
     graft.expressions.TextSignatures.register(docs.sparkSession)
@@ -518,8 +518,7 @@ object TextAnalysis {
       // neutral-to-worse — VocabOovShapeProbe — because the problem was
       // the branch's shape, not its double scan). The DEPLOYMENT form
       // keeps the top-V vocab as a MAINTAINED artifact — the q119
-      // pattern — and pays only [[vocabOovScoreLocal]] per increment;
-      // the bench splits that out as the q91_score_only submetric.
+      // pattern — and pays only [[vocabOovScoreLocal]] per increment.
       val docs = Tables(s, dir).documents
       val tok = tokenCountPairs(docs, "doc_id", "text")
       vocabOovScoreLocal(docs, "doc_id", "text",
@@ -536,9 +535,9 @@ object TextAnalysis {
 
   /** q91's scoring half over a DRIVER-KNOWN vocabulary: one map-only pass
     * through the native [[graft.expressions.OovStats]] expression (the
-    * vocabulary hashed once, never per row). Values identical to
-    * [[vocabOovScore]] — same rounding, same blank-doc contract (the
-    * single-empty-token degenerate case scores n_tokens = 1).
+    * vocabulary hashed once, never per row). Same rounding and blank-doc
+    * contract as the q91 oracle (the single-empty-token degenerate case
+    * scores n_tokens = 1).
     */
   def vocabOovScoreLocal(docs: DataFrame, keyCol: String, textCol: String,
                          terms: Seq[String]): DataFrame = {
@@ -574,20 +573,6 @@ object TextAnalysis {
     tok.groupBy("token").agg(sum(col("c")).as("cnt"))
       .orderBy(col("cnt").desc, col("token")).limit(v)
       .select(col("token"), lit(1).as("_in"))
-
-  /** q91's scoring half alone — the per-increment steady-state cost when the
-    * vocabulary is a maintained artifact: one broadcast hash probe over the
-    * [[tokenCountPairs]] stream and one doc-major aggregate, no token-major
-    * exchange.
-    */
-  def vocabOovScore(tok: DataFrame, vocab: DataFrame): DataFrame =
-    tok.join(broadcast(vocab), Seq("token"), "left_outer")
-      .groupBy("doc_id")
-      .agg(sum(col("c")).as("n_tokens"),
-        sum(when(col("_in").isNull, col("c")).otherwise(lit(0L))).as("n_oov"))
-      .withColumn("oov_rate",
-        graft.functions.VectorFunctions.roundNative(
-          col("n_oov") * 10000d / col("n_tokens"), 0) / 10000d)
 
   val oracles: Map[String, String] = Map(
     // same ' +' tokenization + q77 ratio rounding; bigrams per doc are

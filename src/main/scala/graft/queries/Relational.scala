@@ -174,7 +174,7 @@ object Relational {
   // orders row) — the fan-in rule in Present.presented derives the
   // distributed range-exchange shape from the un-reduced orders fan-in
   // (r15; was a hand pin backed by SortModeProbe at sf1: 1.96 -> 1.56 s
-  // med — the same measurement now lives in SORT_THRESHOLD.json).
+  // med — the same measurement now lives in 7ec77e8:SORT_THRESHOLD.json).
   private def q03Project: Q = (s, dir) =>
     Tables(s, dir).orders
       .select(col("o_orderkey"), (col("o_totalprice") * 0.9).as("discounted"))
@@ -229,7 +229,7 @@ object Relational {
   // fact-sized output materializes on ONE task and the range sampling
   // re-executes that serial join. Hint the shuffled sort-merge once the
   // build side outgrows broadcast scale, gated by the same at-rest
-  // measure staging uses (the q81 pattern; Q07_JOIN_AB.json: sf1 1.70 ->
+  // measure staging uses (the q81 pattern; 7f9c0db:Q07_JOIN_AB.json: sf1 1.70 ->
   // 0.93 s, while at sf0.1 the default broadcast is 0.06 s better and
   // the gate leaves it alone). Sort-merge over shuffled-hash at equal
   // measured speed: SMJ spills gracefully when an orders shard outgrows
@@ -751,7 +751,7 @@ object Relational {
     * checkpointed form ~10× less), so "materialize the frontier's static
     * inputs first" is THE scale rule for linear recursion here.
     */
-  /** STRIDE-2 recursion (round 16, Q81_STRIDE_AB.json): the chain is
+  /** STRIDE-2 recursion (round 16, f2aa3f5:Q81_STRIDE_AB.json): the chain is
     * depth-bounded (pos ≤ 4) and its wall is per-iteration machinery, so
     * the recursion iterates TWO-hop edges (`next2` — positions 1, 3: two
     * materialized rounds instead of three) and one static 1-hop join

@@ -40,8 +40,14 @@ import graft.sources.{CatalogLoader, StatlineLayout}
   * v4 schema variable, the unbound `pq_path` on first-table-empty, and the
   * v4 page misnaming — the rewrite derives every value per table.
   */
+object StatlineIngest {
+  final case class IngestResult(skipped: Boolean, snapshotDir: String,
+                                parquetPaths: Seq[String])
+}
+
 final class StatlineIngest(spark: SparkSession, client: StatlineClient,
                            source: String = "cbs") {
+  import StatlineIngest.IngestResult
 
   private val mapper = new ObjectMapper()
 
@@ -64,9 +70,6 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
   private val ObservationTypes: Map[String, DataType] = Map(
     "Id" -> LongType, "Value" -> DoubleType, "Measure" -> StringType,
     "ValueAttribute" -> StringType, "StringValue" -> StringType)
-
-  final case class IngestResult(skipped: Boolean, snapshotDir: String,
-                                parquetPaths: Seq[String])
 
   private def flatValues(payload: JsonNode): Map[String, String] = {
     val it = payload.fields()

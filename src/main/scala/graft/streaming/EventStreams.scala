@@ -35,8 +35,8 @@ object EventStreams {
   /** Memory-sink view names from prior replays, dropped on the next replay
     * of the SAME session (keyed by the session OBJECT so distinct sessions
     * can never collide; weak keys let a closed session's entry go with it).
-    * Replays are driven sequentially per session — Bench, Verify, and the
-    * specs all consume a replay's result before starting the next.
+    * Replays are driven sequentially per session — Verify, perfbench and
+    * the specs all consume a replay's result before starting the next.
     */
   private val staleSinks =
     java.util.Collections.synchronizedMap(
@@ -162,7 +162,7 @@ object EventStreams {
     * single-writer contract), so external sweeps keep working.
     *
     * Single-writer contract: replays on one caller session serialize (as
-    * Bench/Verify/specs always have); what the clone buys is that the
+    * Verify, perfbench and the specs always have); what the clone buys is that the
     * CALLER's concurrently-planned batch queries can never observe replay
     * posture — the contract is now about the replay machinery's own
     * internals only.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins graft_posting_pairs ≡ the HOF composition it fused out of q134's
-  * posting stage (round 17, Q134_FUSE_AB.json):
+  * posting stage (round 17, 6b33a9f:Q134_FUSE_AB.json):
   *
   *   graft_smallest_k(v, k) → filter(size ≥ 2) →
   *   flatten(transform(ds, (x,i) → transform(slice(ds, i+2, size-i-1),

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Contract pins for the r19 range-frame as-of formulation
-  * (`Q37_PROBE_AB.json` promotion): the union + dedup + last(ignoreNulls)
+  * (`e39dd78:Q37_PROBE_AB.json` promotion): the union + dedup + last(ignoreNulls)
   * shape guaranteed (1) inclusive `>=` tie semantics, (2) max-tiebreak
   * under duplicate right timestamps, (3) nulls before the first right
   * row — the struct-max range frame must preserve all three, and the

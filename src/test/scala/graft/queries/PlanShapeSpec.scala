@@ -93,7 +93,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // per-query hand pins (r14 verdict Missing #4): range sort iff the
     // plan's un-reduced fan-in rows (parquet-footer leaf counts, filters
     // deliberately not reducing) exceed Present.RangeSortRows — measured
-    // calibration in SORT_THRESHOLD.json (SortModeProbe r15 at sf1:
+    // calibration in 7ec77e8:SORT_THRESHOLD.json (SortModeProbe r15 at sf1:
     // q10 merged 13.1 s vs ranged 2.3 s is the wrong-way catastrophe the
     // rule exists to prevent; a needless range sort costs one flat
     // sampling job). At THIS test SF every fixture is far below the
@@ -290,7 +290,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q134 fused pair stage: two data shuffles, map-side posting partial, codegen pair count") {
     val df = plan("q134_multimodal_frame_dedup")
-    // r17 shape (Q134_FUSE_AB.json): fp explode → ONE fused posting
+    // r17 shape (6b33a9f:Q134_FUSE_AB.json): fp explode → ONE fused posting
     // aggregate (graft_posting_pairs) around the fp exchange → packed-long
     // explode → plain HashAggregate count around the pair exchange. Two
     // data shuffles total; the presentation sort's single-partition merge

@@ -41,8 +41,8 @@ def canon(v):
 
 def main():
     # optional: --json <path> writes a per-query {"name": "pass"/"<kind>"}
-    # machine-readable verdict (bench_sf1.py merges it as the sf1-densified
-    # golden value-check column)
+    # machine-readable verdict (e.g. the golden value-check of the
+    # sf1-densified corpus graft.tools.StageSf1 stages under /tmp/graft_sf1)
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     json_out = None
     if "--json" in sys.argv:

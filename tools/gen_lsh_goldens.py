@@ -24,10 +24,9 @@ This is the reference repo's golden-fixture pattern
 results depend on engine-seeded hashes and thus cannot be expressed in
 DuckDB SQL directly.  Regenerate with:  python3 tools/gen_lsh_goldens.py
 [extra_corpus_dir ...] — extra dirs (e.g. the sf1-densified /tmp/graft_sf1
-staged by graft.tools.BenchSf1, whose tables may be directory-shaped
+staged by graft.tools.StageSf1, whose tables may be directory-shaped
 parquet) are appended to the fixture list, so the goldens ALSO carry the
-densified corpus tags and the bench's own scale point is value-checked
-(round-11 verdict gap #1).
+densified corpus tags and the sf1 point is value-checked too.
 
 The per-shingle 64-hash MinHash fold runs through numpy int64 (exact: a*h
 <= (2^31)^2 < 2^63, so no wraparound before the mod) and the SimHash bit
@@ -361,7 +360,7 @@ def main():
     missing = [d for d in sys.argv[1:] if not os.path.exists(d)]
     if missing:
         sys.exit(f"extra corpus dir(s) not found: {missing} — stage them "
-                 f"first (graft.tools.BenchSf1 stages /tmp/graft_sf1)")
+                 f"first (graft.tools.StageSf1 stages /tmp/graft_sf1)")
 
     def rp(sf, table):  # Spark-staged tables are directory-shaped parquet
         p = f"{sf}/{table}.parquet"

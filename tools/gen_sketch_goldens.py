@@ -28,9 +28,9 @@ the parquet inputs directly, not taken from the engine).
 
 Usage: python3 tools/gen_sketch_goldens.py [extra_corpus_dir ...]
 Extra dirs (e.g. the sf1-densified /tmp/graft_sf1 staged by
-graft.tools.BenchSf1; tables may be directory-shaped parquet) are appended
+graft.tools.StageSf1; tables may be directory-shaped parquet) are appended
 to the fixture list so the goldens also carry the densified corpus tags —
-the bench's own scale point is then value-checked (round-11 verdict gap #1).
+the sf1 point is then value-checked too.
 The count-min table build runs through numpy uint64 for the densified
 volumes (wrapping mod-2^64 arithmetic — the identical integers the scalar
 loop computes, asserted against it on a sample per corpus).
@@ -219,7 +219,7 @@ def main():
     for d in sys.argv[1:]:
         if not os.path.exists(d):
             sys.exit(f"extra corpus dir not found: {d} — stage it first "
-                     f"(graft.tools.BenchSf1 stages /tmp/graft_sf1)")
+                     f"(graft.tools.StageSf1 stages /tmp/graft_sf1)")
         dirs.append(d)
     q15_rows = []
     q69_rows = []
