@@ -70,13 +70,10 @@ import org.apache.spark.sql.functions.col
   * single-better query's plan fans ≤150k (customer) — 500k splits the
   * clusters with ≥2× margin on both sides.
   *
-  * `spark.graft.presentationSort` forces a mode end-to-end: `true` = every
-  * presented query merges on one partition, `false` = every one range-sorts
-  * (the big-sorted-output deployment posture); unset = the rule above.
-  * All modes produce identical rows in identical order (pinned by spec).
-  * The flag binds at PLAN-BUILD time — plan caches must key on it
-  * (SparkEntry.planCache does) or a mid-session toggle would silently keep
-  * the previously built sort shape.
+  * Both shapes produce identical rows in identical order (pinned by spec).
+  * The rule binds at PLAN-BUILD time — plan caches must key on the
+  * threshold (SparkEntry.planCache does) or a mid-session change would
+  * silently keep the previously built sort shape.
   */
 object Present {
   /** Measured range-vs-merge crossover in un-reduced fan-in rows (see
@@ -175,7 +172,7 @@ object Present {
 
   implicit final class PresentationOrdering(private val df: DataFrame) extends AnyVal {
     def presented(cols: Column*): DataFrame =
-      sorted(cols, singleByRule =
+      sorted(cols, single =
         fanInRows(df.queryExecution.optimizedPlan) <= thresholdFor(df))
 
     def presented(first: String, rest: String*): DataFrame =
@@ -187,20 +184,12 @@ object Present {
       * diff, churn-proportional by construction). The DECLARATION is the
       * override: the call site must cite the operator's output contract and
       * a two-mode measurement (q87 at sf1: single 0.90 s vs range 1.19 s).
-      * The forced `spark.graft.presentationSort` posture still wins, so the
-      * big-sorted-output deployment mode ranges these too.
       */
     def presentedResultSized(first: String, rest: String*): DataFrame =
-      sorted((first +: rest).map(col), singleByRule = true)
+      sorted((first +: rest).map(col), single = true)
 
-    private def sorted(cols: Seq[Column], singleByRule: => Boolean): DataFrame = {
-      val single = df.sparkSession.conf
-        .getOption("spark.graft.presentationSort") match {
-        case Some(forced) => forced.toBoolean
-        case None => singleByRule
-      }
+    private def sorted(cols: Seq[Column], single: Boolean): DataFrame =
       if (single) df.repartition(1).sortWithinPartitions(cols: _*)
       else df.orderBy(cols: _*)
-    }
   }
 }

@@ -154,14 +154,11 @@ object SparkEntry {
       : Map[String, (SparkSession, String) => DataFrame] =
     qs.map { case (name, fn) =>
       name -> ((s: SparkSession, dir: String) =>
-        // presentationSort AND rangeSortRows are read at PLAN-BUILD time
-        // (Present.presented), so both belong in the cache key: flipping
-        // either conf mid-session must rebuild the sort shape, not serve
-        // the previously built plan. Unset presentationSort is the AUTO
-        // mode (the derived fan-in rule, r15), distinct from "true".
+        // rangeSortRows is read at PLAN-BUILD time (Present.presented), so
+        // it belongs in the cache key: changing it mid-session must rebuild
+        // the sort shape, not serve the previously built plan.
         planCache.computeIfAbsent((System.identityHashCode(s), name, dir,
-            s.conf.getOption("spark.graft.presentationSort").getOrElse("auto") +
-              ":" + s.conf.getOption("spark.graft.rangeSortRows").getOrElse("")),
+            s.conf.getOption("spark.graft.rangeSortRows").getOrElse("")),
           _ => fn(s, dir)))
     }
 

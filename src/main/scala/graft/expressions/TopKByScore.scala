@@ -90,21 +90,11 @@ case class TopKByScore(child: Expression, kExpr: Expression,
                 if b.dataType == IntegerType => Array(b.ordinal, 4)
             case _ => null
           }
-          if (score != null && id != null) {
-            if (sys.env.contains("GRAFT_TOPK_DEBUG"))
-              System.err.println(s"TOPK-FASTPATH ords=${score.toSeq}/${id.toSeq}")
-            Array(score(0), score(1), id(0), id(1))
-          } else {
-            if (sys.env.contains("GRAFT_TOPK_DEBUG"))
-              System.err.println(s"TOPK-SLOWPATH child=$child")
-            null
-          }
+          if (score != null && id != null) Array(score(0), score(1), id(0), id(1))
+          else null
         case _ => null
       }
-    case other =>
-      if (sys.env.contains("GRAFT_TOPK_DEBUG"))
-        System.err.println(s"TOPK-SLOWPATH non-struct child=$other")
-      null
+    case _ => null
   }
 
   override def update(buf: TopKByScore.Heap, input: InternalRow): TopKByScore.Heap = {

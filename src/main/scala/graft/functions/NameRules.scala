@@ -28,10 +28,6 @@ object NameRules {
     lead.replaceAll("[^0-9a-zA-Z_]" + extraChars, "_")
   }
 
-  /** Same rule as a codegen-friendly column expression (no UDF needed). */
-  def cleanNameCol(c: Column): Column =
-    regexp_replace(regexp_replace(trim(c), "^[^a-zA-Z_]+", ""), "[^0-9a-zA-Z_]", "_")
-
   /** BigQuery-compat dot rename over a DataFrame's columns (main.py:170-180). */
   def renameDots(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(_.replace(".", "_")).toIndexedSeq: _*)

@@ -72,10 +72,4 @@ object VectorFunctions {
     */
   def roundNative(c: Column, scale: Int): Column =
     roundNative(org.apache.spark.sql.SparkSession.active)(c, scale)
-
-  /** Squared L2 distance (for LSH bucketing / IVF assignment). */
-  def sqDist(a: Column, b: Column): Column = {
-    val d = zip_with(toDouble(a), toDouble(b), (x, y) => x - y)
-    aggregate(d, lit(0.0), (acc, x) => acc + x * x)
-  }
 }

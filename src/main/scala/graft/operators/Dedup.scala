@@ -71,41 +71,38 @@ object Dedup {
       .withColumn("_bsz", count(lit(1)).over(w))
   }
 
-  /** Candidate-stage input materialization (r19). [[boundedCandidates]]
-    * consumes its signature table FOUR times (a/b sides of the in-cap
-    * self-join + a/b sides of the chain leg), and neither exchange reuse
-    * nor AQE stage reuse unifies the four identical subtrees at runtime
-    * (measured on q124: zero reused exchanges — the scan + signature
-    * kernel ran once per consumer). An EAGER localCheckpoint collapses
-    * them to one computation and wins (q124 med 0.647 → 0.452 s at sf0.1,
-    * CandidateCacheAB); a LAZY MEMORY_AND_DISK persist of the same frame
-    * LOSES (med 0.734 — columnar encode/decode of the payload plus the
-    * cache boundary's AQE restrictions cost more than the recomputes), so
-    * the checkpoint is the shipped form. An input-sized materialization
-    * is still exactly what a 100 TB run cannot hold (the q115
-    * containment-gram lesson), so AUTO materializes only when the
-    * SOURCE's at-rest size estimate is at or under
-    * `spark.graft.candidateMaterializeMaxBytes` (default 64 MB) and
-    * recomputes otherwise; `spark.graft.candidateInputMaterialize` forces
-    * NONE/FORCE explicitly. Gate stats come from the raw source scan
+  /** Eagerly `localCheckpoint`s `input` when `source`'s at-rest size
+    * estimate is at or under `maxBytes`, else returns it unchanged (the
+    * consumers recompute it). Gate stats come from the raw source scan
     * (reliable file-size stats), never the derived frame (a join estimate
-    * without CBO is a size product — useless as a gate).
+    * without CBO is a size product — useless as a gate). An input-sized
+    * materialization is exactly what a 100 TB run cannot hold, hence the
+    * gate.
     */
-  private def materializeCandidateInput(input: DataFrame,
-                                        source: DataFrame): DataFrame = {
-    val conf = input.sparkSession.conf
-    val doIt = conf.getOption("spark.graft.candidateInputMaterialize")
-      .getOrElse("AUTO") match {
-      case "NONE" => false
-      case "AUTO" =>
-        val atRest = source.queryExecution.optimizedPlan.stats.sizeInBytes
-        val gate = conf.getOption("spark.graft.candidateMaterializeMaxBytes")
-          .map(_.toLong).getOrElse(64L << 20)
-        atRest <= gate
-      case _ => true
-    }
-    if (doIt) input.localCheckpoint(true) else input
-  }
+  private def localCheckpointIfSmall(input: DataFrame, source: DataFrame,
+                                     maxBytes: Long): DataFrame =
+    if (source.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes)
+      input.localCheckpoint(true)
+    else input
+
+  /** Candidate-stage input materialization gate (r19), 64 MiB at rest.
+    * [[boundedCandidates]] consumes its signature table FOUR times (a/b
+    * sides of the in-cap self-join + a/b sides of the chain leg), and
+    * neither exchange reuse nor AQE stage reuse unifies the four identical
+    * subtrees at runtime (measured on q124: zero reused exchanges — the
+    * scan + signature kernel ran once per consumer). An EAGER
+    * localCheckpoint collapses them to one computation and wins (q124 med
+    * 0.647 → 0.452 s at sf0.1, CandidateCacheAB); a LAZY MEMORY_AND_DISK
+    * persist of the same frame LOSES (med 0.734 — columnar encode/decode
+    * of the payload plus the cache boundary's AQE restrictions cost more
+    * than the recomputes), so the checkpoint is the shipped form.
+    */
+  private val CandidateCheckpointMaxBytes = 64L << 20
+
+  /** [[containmentPairs]]' gram-table materialization gate (r16/r19),
+    * 16 MiB at rest; the measurements are in its body.
+    */
+  private val GramCheckpointMaxBytes = 16L << 20
 
   /** Within-bucket candidate pairs with a HOT-BUCKET bound. Buckets at or
     * under `maxBucket` pair exhaustively (`a < b`) exactly as before; an
@@ -173,10 +170,10 @@ object Dedup {
                    maxBucket: Int = 1024): DataFrame = {
     val spark = docs.sparkSession
     val d = spread(docs)
-    val bands = materializeCandidateInput(
+    val bands = localCheckpointIfSmall(
       d.select(col(keyCol),
         posexplode(TextSignatures.minhashBandsCol(spark)(col("text"), k)).as(Seq("band", "bh"))),
-      docs)
+      docs, CandidateCheckpointMaxBytes)
     val candidates = boundedCandidates(bands, keyCol, Seq("band", "bh"), Nil, maxBucket)
       .dropDuplicates("a", "b")
     candidates
@@ -449,7 +446,7 @@ object Dedup {
     // round 14: the native one-pass graft_word_ngrams (distinct folded in)
     // replaces the transform/slice/concat_ws composition — the q123/q75
     // higher-order-function finding applied here too
-    // Storage posture is MEASURED, gated, and conf-overridable
+    // Storage posture is MEASURED and gated
     // (f2aa3f5:Q115_PERSIST_AB.json, r16): the gram cache is the dedup family's
     // only input-sized persist, and the sweep shows it is scale-LOCAL —
     // at the sf1-scale corpus (5.9 MB at rest) MEMORY_AND_DISK wins ~9%
@@ -458,37 +455,23 @@ object Dedup {
     // 25.8, mins all ~22-23 s): the distinct-gram string arrays inflate
     // ~2 orders of magnitude off at-rest bytes and thrash the storage
     // region, while recomputing the codegen'd ngram expression per
-    // consumer rides the (page-cached) scan. AUTO therefore persists only
-    // when the input's Catalyst size estimate is measurably small
-    // (default gate 16 MB at rest — between the measured win and loss
-    // points, conf `spark.graft.containmentPersistMaxBytes`), and
-    // otherwise recomputes — the posture a 100 TB run needs, arrived at
-    // without configuration. `spark.graft.containmentGramStorage` forces
-    // MEMORY_AND_DISK / DISK_ONLY / NONE explicitly.
+    // consumer rides the (page-cached) scan. The gram table is therefore
+    // materialized only when the input's Catalyst size estimate is
+    // measurably small (16 MiB at rest — between the measured win and loss
+    // points), and otherwise recomputed — the posture a 100 TB run needs,
+    // arrived at without configuration.
+    // r19 (Q115GramStorageAB, honest per-run-clear protocol): the eager
+    // localCheckpoint beats the r16 MEMORY_AND_DISK persist on the gated
+    // small side too (med 1.996 -> 1.893, min 1.926 -> 1.705 at sf0.1) —
+    // no columnar encode/decode, no cache-boundary AQE restrictions. The
+    // 16 MiB gate is unchanged: the r16 10x-decade loss (string-array
+    // inflation thrashing storage) is a property of materializing gram
+    // arrays at all, so the big side still recomputes.
     val g0 = spread(docs).filter(TextAnalysis.wsTokenCount(col("text")) >= n)
       .select(col(keyCol),
         graft.expressions.TextSignatures.wordNgramsCol(docs.sparkSession)(
           col("text"), n, distinct = true).as("g"))
-    val conf = docs.sparkSession.conf
-    val g = conf.getOption("spark.graft.containmentGramStorage").getOrElse("AUTO") match {
-      case "NONE" => g0
-      case "AUTO" =>
-        val atRest = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-        val gate = conf.getOption("spark.graft.containmentPersistMaxBytes")
-          .map(_.toLong).getOrElse(16L << 20)
-        // r19 (Q115GramStorageAB, honest per-run-clear protocol): the
-        // eager localCheckpoint beats the r16 MEMORY_AND_DISK persist on
-        // the gated small side too (med 1.996 -> 1.893, min 1.926 ->
-        // 1.705 at sf0.1) — no columnar encode/decode, no cache-boundary
-        // AQE restrictions. The 16 MB at-rest gate is unchanged: the r16
-        // 10x-decade loss (string-array inflation thrashing storage) is a
-        // property of materializing gram arrays at all, so the big side
-        // still recomputes.
-        if (atRest <= gate) g0.localCheckpoint(true)
-        else g0
-      case "LOCALCKPT" => g0.localCheckpoint(true) // explicit probe arm
-      case lvl => g0.persist(org.apache.spark.storage.StorageLevel.fromString(lvl))
-    }
+    val g = localCheckpointIfSmall(g0, docs, GramCheckpointMaxBytes)
     val ex = g.select(col(keyCol), explode(col("g")).as("sh"))
     // r15 candidate-stage reshape, each step measured (Q115Legs /
     // a63a540:Q115_JOIN_AB.json / a63a540:Q115_SHAPE_AB.json, rows asserted identical
@@ -568,7 +551,8 @@ object Dedup {
   def simhashPairs(docs: DataFrame, keyCol: String, textCol: String,
                    maxDist: Int = 3, maxBucket: Int = 4096): DataFrame = {
     boundedCandidates(
-      materializeCandidateInput(simhashChunkTable(docs, keyCol, textCol), docs),
+      localCheckpointIfSmall(simhashChunkTable(docs, keyCol, textCol), docs,
+        CandidateCheckpointMaxBytes),
       keyCol, Seq("chunk", "cv"), Seq("simhash"), maxBucket)
       .withColumn("hamming", bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("hamming") <= maxDist)
@@ -661,10 +645,10 @@ object Dedup {
       case None => return emb.select(col(keyCol).as("a"), col(keyCol).as("b"),
         lit(0.0).as("sim")).limit(0)
     }
-    val bucketed = materializeCandidateInput(
+    val bucketed = localCheckpointIfSmall(
       graft.operators.Similarity.withLshBucket(emb, vecCol, nPlanes, dim)
         .select(col(keyCol), col(vecCol), col("bucket")),
-      emb)
+      emb, CandidateCheckpointMaxBytes)
     boundedCandidates(bucketed, keyCol, Seq("bucket"), Seq(vecCol), maxBucket)
       .select(col("a"), col("b"),
         rnd(cos(col(s"${vecCol}_a"), col(s"${vecCol}_b")), 6).as("sim"))
@@ -727,10 +711,10 @@ object Dedup {
     // bit-identical to the inline cosine; see expressions.VecPrimitives)
     val dot = graft.functions.VectorFunctions.dotNative(spark) _
     val nrm = graft.functions.VectorFunctions.normNative(spark)(_)
-    val sided = materializeCandidateInput(
+    val sided = localCheckpointIfSmall(
       cells.join(emb.select(col(keyCol).as("_id"), col(vecCol).as("_v"),
         nrm(col(vecCol)).as("_n")), "_id"),
-      emb)
+      emb, CandidateCheckpointMaxBytes)
     boundedCandidates(sided, "_id", Seq("cent_id"), Seq("_v", "_n"), maxCell)
       .select(col("a"), col("b"),
         graft.functions.VectorFunctions.roundNative(spark)(

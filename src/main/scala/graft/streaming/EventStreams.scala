@@ -13,8 +13,9 @@ import graft.Present._
   *
   * Streams are file-source replays of the fixture parquet: `readStream` →
   * event-time transforms → memory sink, driven to completion with
-  * `Trigger.AvailableNow`. The same transformations run against a real
-  * unbounded source unchanged; watermarks bound state at scale.
+  * `Trigger.Once` (`Trigger.AvailableNow` for paced sources). The same
+  * transformations run against a real unbounded source unchanged;
+  * watermarks bound state at scale.
   *
   * Mode notes: bounded replays use `complete` output for windowed aggregates
   * — in `append` mode, windows at the tail of a bounded stream sit above the
@@ -118,7 +119,8 @@ object EventStreams {
   }
 
   /** Fixed conf posture of the replay clone (see [[replaySession]]):
-    * throwaway-checkpoint hygiene, constant for every bounded replay.
+    * throwaway-checkpoint hygiene and a narrow shuffle width, constant for
+    * every bounded replay.
     *  - retain a single batch (nothing resumes from these checkpoints) and
     *    skip per-row state format validation (the schema is fixed by the
     *    plan that just built it);
@@ -135,9 +137,13 @@ object EventStreams {
     *    so `createAtomic` keeps its guarantee. Durable checkpoints, and HDFS
     *    or object-store paths, keep Spark's default — only these throwaway
     *    clones carry the setting;
-    *  - no checksum sidecars for the same never-resumed checkpoints.
+    *  - no checksum sidecars for the same never-resumed checkpoints;
+    *  - four shuffle partitions: stateful operators allocate one state
+    *    store per shuffle partition up front, and a bounded replay needs
+    *    only a few (a cluster deployment sizes this to its executors).
     */
   private val ReplayPosture = Map(
+    "spark.sql.shuffle.partitions" -> "4",
     "spark.sql.streaming.minBatchesToRetain" -> "1",
     "spark.sql.streaming.stateStore.formatValidation.enabled" -> "false",
     "spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s",
@@ -156,10 +162,8 @@ object EventStreams {
     * The clone's key is [[ReplayPosture]] PLUS the per-replay knobs
     * (no-data microbatch, state-store provider) — r15 ADVICE: keying the
     * knobs means two concurrent replays with different values run on two
-    * different clones instead of racing set-then-start on one. The
-    * `spark.graft.stream.*` knobs are read THROUGH from the caller on every
-    * call (probes and the RocksDB parity spec set them there, under the
-    * single-writer contract), so external sweeps keep working.
+    * different clones instead of racing set-then-start on one. Nothing
+    * else is copied from the caller: the clone's conf is the posture key.
     *
     * Single-writer contract: replays on one caller session serialize (as
     * Verify, perfbench and the specs always have); what the clone buys is that the
@@ -184,27 +188,7 @@ object EventStreams {
     val posture = ReplayPosture +
       ("spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString) ++
       resolvedProvider.map(ProviderKey -> _)
-    val s2 = graft.PostureSessions(caller, posture)
-    // Caller-conf READ-THROUGHS below are deliberately per-call sets, not
-    // key material: concurrent replays of one caller read the same caller
-    // values, so the re-sets are idempotent (and sweeping probes mutate
-    // them between replays under the documented single-writer contract —
-    // folding a swept value into the key would leak one SessionState per
-    // swept point).
-    //
-    // Stateful operators allocate one state store per shuffle partition up
-    // front; for these bounded replays a couple is plenty (a real cluster
-    // deployment sizes this to its executor count instead).
-    s2.conf.set("spark.sql.shuffle.partitions",
-      caller.conf.getOption("spark.graft.stream.partitions").getOrElse("4"))
-    for (k <- Seq("spark.graft.stream.trigger", "spark.graft.stream.checkpointBase",
-                  "spark.graft.stream.debugProgress", "spark.graft.stream.partitions",
-                  "spark.graft.stream.twoSourceJoin"))
-      caller.conf.getOption(k) match {
-        case Some(v) => s2.conf.set(k, v)
-        case None => s2.conf.unset(k)
-      }
-    s2
+    graft.PostureSessions(caller, posture)
   }
 
   /** Runs a (bounded) streaming frame to completion into a memory sink and
@@ -215,9 +199,9 @@ object EventStreams {
     * shares the SparkContext, so callers compose/collect it as before.
     *
     * @param frame builds the streaming frame against the replay session
-    * @param availableNow force Trigger.AvailableNow regardless of the
-    *   session trigger conf — required when the source paces batches
-    *   (maxFilesPerTrigger) and Trigger.Once would collapse them into one.
+    * @param availableNow use Trigger.AvailableNow instead of Trigger.Once —
+    *   required when the source paces batches (maxFilesPerTrigger) and
+    *   Trigger.Once would collapse them into one.
     * @param noDataBatch keep the trailing no-data microbatch — required for
     *   APPEND-mode event-time queries, where windows closed by the LAST data
     *   batch's watermark only flush in one further batch.
@@ -225,29 +209,13 @@ object EventStreams {
     *   (e.g. RocksDB for transformWithState); None reads the caller's
     *   setting through, defaulting to the HDFS-backed store.
     */
-  /** Wall-clock phase probe for the replay machinery: when the caller
-    * session sets `spark.graft.stream.debugPhases=true`, each labelled
-    * phase of a replay prints `STREAMPHASE <label> <secs>` — the
-    * setup-vs-trigger-vs-readback split the engine's own `durationMs`
-    * (triggerExecution breakdown) cannot see. Measurement-only: a single
-    * conf read + nanoTime when enabled, nothing when off.
-    */
-  private[graft] def phased[T](caller: SparkSession, label: String)(body: => T): T = {
-    if (!caller.conf.getOption("spark.graft.stream.debugPhases").contains("true")) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally println(f"STREAMPHASE $label ${(System.nanoTime() - t0) / 1e9}%.3f")
-    }
-  }
-
   def runToMemory(caller: SparkSession, frame: SparkSession => DataFrame,
                   mode: String,
                   availableNow: Boolean = false,
                   noDataBatch: Boolean = false,
                   stateStoreProvider: Option[String] = None): DataFrame = {
-    val spark = phased(caller, "session")(replaySession(caller, noDataBatch, stateStoreProvider))
-    val df = phased(caller, "frame")(frame(spark))
+    val spark = replaySession(caller, noDataBatch, stateStoreProvider)
+    val df = frame(spark)
     require(df.sparkSession eq spark,
       "runToMemory: the frame must be built on the replay session it is given")
     // Replay sinks are consumed immediately by the caller; earlier replays'
@@ -264,62 +232,47 @@ object EventStreams {
     // A bounded replay fits one microbatch, and Trigger.Once pays one less
     // offset-planning round than AvailableNow (~0.1 s on the measured
     // floor). A LIVE deployment would use AvailableNow/processing-time
-    // triggers — selectable via spark.graft.stream.trigger.
+    // triggers.
     val trigger =
       if (availableNow) Trigger.AvailableNow()
-      else spark.conf.getOption("spark.graft.stream.trigger").getOrElse("once") match {
-        case "once" => Trigger.Once(): @annotation.nowarn("cat=deprecation")
-        case _ => Trigger.AvailableNow()
-      }
-    locally {
-      val writer = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(trigger)
-      // Optional scratch checkpoint root (e.g. a tmpfs on hosts where the
-      // default tmp dir is slow disk). Replays are rebuildable by
-      // definition, so losing the checkpoint on restart costs nothing — a
-      // durable deployment sets a real checkpointLocation and never goes
-      // through runToMemory.
-      val ckpt = Some(spark.conf.getOption("spark.graft.stream.checkpointBase")
-          .getOrElse(scratchBase)).map { base =>
-        val dir = java.nio.file.Paths.get(base, s"graft_ckpt_$name")
-        writer.option("checkpointLocation", dir.toString)
-        dir
-      }
-      val q = phased(caller, "start")(writer.start())
-      phased(caller, "await")(q.awaitTermination())
-      // Probe hook: surface the engine's own per-phase timing breakdown.
-      if (spark.conf.getOption("spark.graft.stream.debugProgress").contains("true"))
-        q.recentProgress.foreach(p => println(s"PROGRESS ${p.json}"))
-      phased(caller, "ckptclean")(ckpt.foreach { dir => // best-effort scratch cleanup
-        import scala.jdk.CollectionConverters._
-        val s = java.nio.file.Files.walk(dir)
-        try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        finally s.close()
-      })
+      else Trigger.Once(): @annotation.nowarn("cat=deprecation")
+    // Scratch checkpoint root: the caller's `spark.graft.stream.checkpointBase`
+    // (e.g. a tmpfs on hosts where the default tmp dir is slow disk), else
+    // [[scratchBase]]. Replays are rebuildable by definition, so losing the
+    // checkpoint on restart costs nothing — a durable deployment sets a real
+    // checkpointLocation and never goes through runToMemory.
+    val ckpt = java.nio.file.Paths.get(
+      caller.conf.getOption("spark.graft.stream.checkpointBase").getOrElse(scratchBase),
+      s"graft_ckpt_$name")
+    val q = df.writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode(mode)
+      .trigger(trigger)
+      .option("checkpointLocation", ckpt.toString)
+      .start()
+    q.awaitTermination()
+    locally { // best-effort scratch cleanup
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.walk(ckpt)
+      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+      finally s.close()
     }
     // No conf restore: every knob above lives on the replay clone, which
     // the machinery owns — the caller session was never touched.
     spark.table(name)
   }
 
-  /** The q60 plan pre-sink — shared by the certified query (memory-sink
-    * replay) and the streaming scale probe (noop sink at 600×), so the
-    * probe measures the PRODUCTION plan, not a lookalike.
-    */
-  private[graft] def tumblingFrame(spark: SparkSession, dir: String): DataFrame =
-    readEvents(spark, dir)
+  /** B31: tumbling 1-hour window counts by event type. */
+  def tumblingCounts(spark: SparkSession, dir: String): DataFrame = {
+    val agg = (s: SparkSession) => readEvents(s, dir)
       .groupBy(window(col("ts_utc"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .select(unix_micros(col("window.start")).as("bucket_us"), col("event_type"), col("cnt"))
-
-  /** B31: tumbling 1-hour window counts by event type. */
-  def tumblingCounts(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(spark, s => tumblingFrame(s, dir), "complete")
+    runToMemory(spark, agg, "complete")
       .presented("bucket_us", "event_type")
+  }
 
   /** B33: session windows (30-minute gap) per user → sessions per user. */
   def sessionCounts(spark: SparkSession, dir: String): DataFrame = {
@@ -715,30 +668,20 @@ object EventStreams {
     * exact oracle.
     */
   def attributionPairs(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(spark, s => attributionPairsFrame(s, dir), "append")
+    // SELF-join over ONE stream source (r20): the impression and click
+    // sides are two filters of the same events stream, so two independent
+    // file sources would pay a second per-batch offset resolution +
+    // directory listing + WAL entry for identical data. One source feeds
+    // both sides (Spark's documented stream self-join support); the join
+    // result is byte-identical — oracle re-checked.
+    runToMemory(spark, s => { val ev = readEvents(s, dir); attributionPairsFrom(ev, ev) },
+      "append")
       .presented("imp_id", "click_id")
-
-  /** The q73 plan pre-sink (see [[tumblingFrame]] for why it is split out).
-    * SELF-join over ONE stream source (r20): the impression and click sides
-    * are two filters of the same events stream, so instantiating two
-    * independent file sources paid a second per-batch offset resolution +
-    * directory listing + WAL entry for identical data. One source feeds
-    * both sides (Spark's documented stream self-join support); the join
-    * result is byte-identical — oracle re-checked.
-    */
-  private[graft] def attributionPairsFrame(spark: SparkSession, dir: String): DataFrame =
-    if (twoSourceJoin(spark)) attributionPairsFrom(readEvents(spark, dir), readEvents(spark, dir))
-    else { val ev = readEvents(spark, dir); attributionPairsFrom(ev, ev) }
-
-  /** A/B escape hatch for the r20 shared-source change (default: shared). */
-  private def twoSourceJoin(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.stream.twoSourceJoin").contains("true")
 
   /** The q73 join over caller-provided event streams (same `ts_utc` +
     * `event_type` shape as [[readEvents]]) — the certified plan decoupled
-    * from the default staging, so a paced/multi-batch source (the
-    * watermark-eviction probe, the restart spec) measures and restarts THIS
-    * plan, not a re-implementation.
+    * from the default staging, so a paced/multi-batch source (the restart
+    * spec's) restarts THIS plan, not a re-implementation.
     */
   private[graft] def attributionPairsFrom(impEvents: DataFrame,
                                           clickEvents: DataFrame): DataFrame = {
@@ -770,20 +713,13 @@ object EventStreams {
   def attributionOuter(spark: SparkSession, dir: String): DataFrame =
     // availableNow + noDataBatch: the outer-null flush NEEDS the trailing
     // no-data batch — eviction runs under the watermark advanced by the
-    // last data batch
-    runToMemory(spark, s => attributionOuterFrame(s, dir), "append",
-      availableNow = true, noDataBatch = true)
+    // last data batch. One shared stream source for both join sides (see
+    // attributionPairs); the per-side watermarks still come from each
+    // side's own filter, so the final `min` watermark (and therefore the
+    // outer-null cutoff) is the same as with two sources.
+    runToMemory(spark, s => { val ev = readEvents(s, dir); attributionOuterFrom(ev, ev) },
+      "append", availableNow = true, noDataBatch = true)
       .presented("imp_id", "click_id")
-
-  /** The q80 plan pre-sink (see [[tumblingFrame]] for why it is split out).
-    * One shared stream source for both join sides — see
-    * [[attributionPairsFrame]]; the per-side watermarks still come from
-    * each side's own filter, so the final `min` watermark (and therefore
-    * the outer-null cutoff) is unchanged.
-    */
-  private[graft] def attributionOuterFrame(spark: SparkSession, dir: String): DataFrame =
-    if (twoSourceJoin(spark)) attributionOuterFrom(readEvents(spark, dir), readEvents(spark, dir))
-    else { val ev = readEvents(spark, dir); attributionOuterFrom(ev, ev) }
 
   /** The q80 join over caller-provided event streams — see
     * [[attributionPairsFrom]] for why the plan is source-decoupled.
@@ -839,17 +775,15 @@ object EventStreams {
     val ckpt = base.resolve("ckpt")
     val sinkSchema = "bucket_us BIGINT, event_type STRING, cnt BIGINT"
     try {
-      phased(spark, "fs_sweep")(graft.StageDir.sweepRunScratch(Seq("graft_filesink_")))
-      phased(spark, "fs_stream") {
-        val q = agg.writeStream
-          .format("parquet")
-          .option("path", outDir.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      graft.StageDir.sweepRunScratch(Seq("graft_filesink_"))
+      agg.writeStream
+        .format("parquet")
+        .option("path", outDir.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
       // The returned frame must not lazily read this run's scratch (the next
       // run sweeps it once released). The committed set — manifest-gated via
       // the _spark_metadata read above the sink dir — is republished through
@@ -862,12 +796,11 @@ object EventStreams {
       // alters the result republishes into a new dir instead of certifying
       // the stale copy.
       val fresh = spark.read.schema(sinkSchema).parquet(outDir.toString)
-      val sig = phased(spark, "fs_contentsig")(
-        s"${eventsSig(dir)}:c${contentSig(fresh)}")
-      val published = phased(spark, "fs_publish")(graft.StageDir.publish(
+      val sig = s"${eventsSig(dir)}:c${contentSig(fresh)}"
+      val published = graft.StageDir.publish(
         s"graft_filesink_snap_x${dirTag(dir)}", sig) { tmp =>
         fresh.write.mode("overwrite").parquet(tmp.toString)
-      })
+      }
       spark.read.schema(sinkSchema).parquet(published.toString)
     } finally graft.StageDir.releaseRunDir(base)
   }
@@ -927,7 +860,7 @@ object EventStreams {
     val s2 = replaySession(spark, noDataBatch = false, provider = None)
     val src = readEvents(s2, dir, maxFilesPerTrigger = Some(3))
       .select("user_id", "ts_us", "event_id", "value")
-    val finalSnap = phased(spark, "up_stream")(streamUpsertRun(s2, src, snapBase))
+    val finalSnap = streamUpsertRun(s2, src, snapBase)
     // Publish the FINAL version via StageDir: atomic rename into a
     // signature-pinned dir outside the sweep namespace, so the returned
     // LAZY read survives every later run (same fixture + same result →
@@ -937,15 +870,14 @@ object EventStreams {
     // coalesce(1): output partitions are sized to snapshot volume from the
     // parquet footer row count (metadata-only with aggregate pushdown).
     val snap = spark.read.parquet(finalSnap)
-    val upSig = phased(spark, "up_contentsig")(
-      s"${eventsSig(dir)}:c${contentSig(snap)}")
-    val published = phased(spark, "up_publish")(graft.StageDir.publish(
+    val upSig = s"${eventsSig(dir)}:c${contentSig(snap)}"
+    val published = graft.StageDir.publish(
       s"graft_upsert_snap_x${dirTag(dir)}", upSig) { tmp =>
       val rpp = spark.conf.getOption("spark.graft.upsert.rowsPerPartition")
         .map(_.toLong).getOrElse(4000000L)
       val parts = math.max(1L, (snap.count() + rpp - 1) / rpp).toInt
       snap.repartition(parts).write.mode("overwrite").parquet(tmp.toString)
-    })
+    }
     spark.read.parquet(published.toString).presented("user_id")
     } finally graft.StageDir.releaseRunDir(snapBase)
   }
@@ -1061,9 +993,8 @@ object EventStreams {
     import graft.operators.Similarity
     val emb = graft.Tables(spark, dir).embeddings
     val tag = s"st${Integer.toHexString(dir.hashCode)}"
-    phased(spark, "ivf_build")(
-      Similarity.buildIvfIndex(spark, emb.filter(col("vec_id") % 5 =!= 0),
-        "vec_id", "embedding", tag))
+    Similarity.buildIvfIndex(spark, emb.filter(col("vec_id") % 5 =!= 0),
+      "vec_id", "embedding", tag)
     // bounded multi-file replay (the events convention): staged once per
     // fixture, 4 files at 2 per trigger → two append microbatches; the
     // %5=0 filter runs inside the stream, so batch membership is whatever
@@ -1078,20 +1009,18 @@ object EventStreams {
       val src = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "2").parquet(stageDir)
         .filter(col("vec_id") % 5 === 0)
-      phased(spark, "ivf_stream") {
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // batch-id-keyed segment with overwrite: foreachBatch is
-            // at-least-once, and a replayed batch must not double its
-            // vectors in the index — see Similarity.appendIvfSegment
-            Similarity.appendIvfSegment(batch.sparkSession, batch,
-              "vec_id", "embedding", tag, id)
-          }
-          .option("checkpointLocation", ckptBase.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      src.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          // batch-id-keyed segment with overwrite: foreachBatch is
+          // at-least-once, and a replayed batch must not double its
+          // vectors in the index — see Similarity.appendIvfSegment
+          Similarity.appendIvfSegment(batch.sparkSession, batch,
+            "vec_id", "embedding", tag, id)
+        }
+        .option("checkpointLocation", ckptBase.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
     } finally graft.StageDir.releaseRunDir(ckptBase)
     Similarity.searchIvfIndex(spark, emb.filter(col("vec_id") <= 5),
       "vec_id", "embedding", tag, k = 3, nprobe = 4)

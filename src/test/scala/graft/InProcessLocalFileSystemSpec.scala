@@ -114,5 +114,15 @@ class InProcessLocalFileSystemSpec extends AnyFunSuite {
     assert(clone.conf.getOption(key).exists(_.endsWith(".FileSystemBasedCheckpointFileManager")))
     assert(clone.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false")
     assert(!spark.conf.getOption(key).exists(_.endsWith(".FileSystemBasedCheckpointFileManager")))
+    // the narrow replay width is part of the clone's posture, whatever the
+    // caller's width; the caller keeps its own
+    val width = "spark.sql.shuffle.partitions"
+    val callerWidth = spark.conf.get(width)
+    spark.conf.set(width, "7")
+    try {
+      val clone7 = EventStreams.replaySession(spark, noDataBatch = false, provider = None)
+      assert(clone7.conf.get(width) == "4")
+      assert(spark.conf.get(width) == "7")
+    } finally spark.conf.set(width, callerWidth)
   }
 }

@@ -6,7 +6,7 @@ import java.time.LocalDate
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,20 +26,10 @@ import graft.TestSpark
   * Spark pipeline, and the outputs compared to the golden files.
   */
 class GoldenReplaySpec extends AnyFunSuite {
+  import GoldenReplaySpec.GoldenDataset
+
   private lazy val spark = TestSpark.spark
   private val mapper = new ObjectMapper()
-
-  private final case class GoldenDataset(dir: String, source: String, id: String,
-                                         thirdParty: Boolean, emptyTables: Seq[String]) {
-    val host: String = if (thirdParty) "dataderden.cbs.nl" else "opendata.cbs.nl"
-    val base = s"https://$host/ODataFeed/odata/$id"
-    def prefix = s"$source.v3.$id"
-    def tables: Seq[String] = new java.io.File(dir).list().toSeq.sorted
-      .filter(f => f.startsWith(s"${prefix}_") && f.endsWith(".parquet"))
-      .map(_.stripPrefix(s"${prefix}_").stripSuffix(".parquet"))
-    def golden(name: String): DataFrame = spark.read.parquet(s"$dir/${prefix}_$name.parquet")
-    def metadataRaw: String = Files.readString(Paths.get(s"$dir/${prefix}_Metadata.json"))
-  }
 
   private val datasets = Seq(
     GoldenDataset("/root/reference/tests/data/83583NED", "cbs", "83583NED",
@@ -115,7 +105,7 @@ class GoldenReplaySpec extends AnyFunSuite {
       // only the main table is paginated (statline.py:444-460); dimension
       // endpoints return everything in one response, however large
       val pageSize = if (name == "TypedDataSet") 10000 else Int.MaxValue
-      val ps = pagesOf(d.golden(name), rename, pageSize)
+      val ps = pagesOf(d.golden(spark, name), rename, pageSize)
       val baseUrl = s"${d.base}/$name?$$format=json"
       ps.zipWithIndex.map { case (p, i) =>
         (if (i == 0) baseUrl else s"$baseUrl&$$skip=${i * 10000}") -> p
@@ -125,7 +115,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     ReplayClient(pages ++ empties ++ Map(
       ODataUrls.v3CatalogUrl(d.id, d.thirdParty) -> s"""{"value":[${d.metadataRaw}]}""",
       s"${d.base}?$$format=json" -> s"""{"value":[$serviceEntries]}""",
-      s"${d.base}/$$metadata" -> csdlFor(d.golden("TypedDataSet").schema),
+      s"${d.base}/$$metadata" -> csdlFor(d.golden(spark, "TypedDataSet").schema),
     ))
   }
 
@@ -141,7 +131,7 @@ class GoldenReplaySpec extends AnyFunSuite {
 
     // main table: exact declared schema (int32/float preserved) + content
     val mainMine = spark.read.parquet(s"${res.snapshotDir}/${d.prefix}_TypedDataSet.parquet")
-    val mainGold = d.golden("TypedDataSet")
+    val mainGold = d.golden(spark, "TypedDataSet")
     assert(mainMine.schema.map(f => (f.name, f.dataType)) ==
       mainGold.schema.map(f => (f.name, f.dataType)))
     assert(mainMine.count() == mainGold.count())
@@ -152,7 +142,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     // inference types them string — both carry only nulls)
     d.tables.filterNot(_ == "TypedDataSet").foreach { name =>
       val mine = spark.read.parquet(s"${res.snapshotDir}/${d.prefix}_$name.parquet")
-      val gold = d.golden(name)
+      val gold = d.golden(spark, name)
       assert(mine.columns.toSeq == gold.columns.toSeq, s"$name columns")
       val allNull = gold.columns.filter(c => gold.filter(gold(c).isNotNull).isEmpty).toSet
       gold.schema.fields.filterNot(f => allNull(f.name)).foreach { f =>
@@ -226,5 +216,20 @@ class GoldenReplaySpec extends AnyFunSuite {
     assert(mineMeta == mapper.readTree(metaRaw))
     // v4 never writes ColDescriptions (main.py:356-357)
     assert(!Files.exists(Paths.get(s"${res.snapshotDir}/cbs.v4.${id}_ColDescriptions.json")))
+  }
+}
+
+object GoldenReplaySpec {
+  final case class GoldenDataset(dir: String, source: String, id: String,
+                                 thirdParty: Boolean, emptyTables: Seq[String]) {
+    val host: String = if (thirdParty) "dataderden.cbs.nl" else "opendata.cbs.nl"
+    val base = s"https://$host/ODataFeed/odata/$id"
+    def prefix = s"$source.v3.$id"
+    def tables: Seq[String] = new java.io.File(dir).list().toSeq.sorted
+      .filter(f => f.startsWith(s"${prefix}_") && f.endsWith(".parquet"))
+      .map(_.stripPrefix(s"${prefix}_").stripSuffix(".parquet"))
+    def golden(spark: SparkSession, name: String): DataFrame =
+      spark.read.parquet(s"$dir/${prefix}_$name.parquet")
+    def metadataRaw: String = Files.readString(Paths.get(s"$dir/${prefix}_Metadata.json"))
   }
 }
