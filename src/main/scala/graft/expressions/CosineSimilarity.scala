@@ -49,27 +49,11 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_cosine"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val xd = isDoubleArr(left.dataType)
-    val yd = isDoubleArr(right.dataType)
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var nx = 0.0
-    var ny = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = if (xd) x.getDouble(i) else x.getFloat(i).toDouble
-      val yv = if (yd) y.getDouble(i) else y.getFloat(i).toDouble
-      dot += xv * yv
-      nx += xv * xv
-      ny += yv * yv
-      i += 1
-    }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.fold(a.asInstanceOf[ArrayData], isDoubleArr(left.dataType),
+      b.asInstanceOf[ArrayData], isDoubleArr(right.dataType))
 
+  // the same loop as [[CosineSimilarity.fold]], emitted inline
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       // element getters resolve at CODEGEN time from the static child types —
@@ -104,6 +88,29 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
   val name = "graft_cosine"
+
+  /** The cosine fold: Σxy / (√Σx² · √Σy²), accumulated in element order over
+    * the common prefix, float elements widened to double. The interpreted
+    * path and the driver-side k-means trainer
+    * ([[graft.operators.Similarity.kmeansCentroids]]) both call this;
+    * `doGenCode` emits the same loop.
+    */
+  def fold(x: ArrayData, xDouble: Boolean, y: ArrayData, yDouble: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0
+    var nx = 0.0
+    var ny = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = if (xDouble) x.getDouble(i) else x.getFloat(i).toDouble
+      val yv = if (yDouble) y.getDouble(i) else y.getFloat(i).toDouble
+      dot += xv * yv
+      nx += xv * xv
+      ny += yv * yv
+      i += 1
+    }
+    dot / (math.sqrt(nx) * math.sqrt(ny))
+  }
 
   private val info = new ExpressionInfo(classOf[CosineSimilarity].getName, name)
 

@@ -664,9 +664,11 @@ object Dedup {
     * cell by construction, which is why the published semantic-dedup
     * pipelines (SemDeDup-family) block on learned clusters.
     *
-    * Scale shape: centroid training is the amortized IVF index build (one
-    * broadcast + argmax + bounded shuffle per Lloyd iteration); assignment
-    * is one broadcast join; pairing is an EQUI-join on the dense `cent_id`
+    * Scale shape: centroid training is the IVF index build, one collect
+    * of the training set plus driver-side Lloyd iterations
+    * ([[Similarity.kmeansCentroids]]); the training set is bounded by
+    * `trainSampleMod` and by `spark.driver.maxResultSize`. Assignment is
+    * one broadcast join; pairing is an EQUI-join on the dense `cent_id`
     * key through [[boundedCandidates]], so a degenerate cell (an
     * identical-vector pile) costs linear chain pairs, never quadratic. At
     * 100 TB, `nlist` scales with the corpus (target cell size stays
@@ -682,30 +684,25 @@ object Dedup {
     * Training, assignment, and verify all rank on 6-decimal-rounded
     * cosines with id tiebreaks (the q55 reproducibility contract), so the
     * whole pipeline — trained centroids included — is DuckDB-oracled.
-    */
-  /** @param trainSampleMod when > 1, k-means trains on the deterministic
+    *
+    * @param trainSampleMod when > 1, k-means trains on the deterministic
     *   `portableHash(key) % mod == 0` corpus slice instead of the full
-    *   corpus — the documented 100 TB posture (training cost is
-    *   sample × nlist per iteration instead of corpus × nlist; assignment
-    *   and pairing still cover the full corpus). 1 = train on everything
-    *   (the certified q124 configuration).
+    *   corpus — the documented 100 TB posture: the slice is what the
+    *   driver collects and iterates over, while assignment and pairing
+    *   still cover the full corpus. 1 = train on everything (the
+    *   certified q124 configuration).
     */
   def semanticDedupPairs(emb: DataFrame, keyCol: String, vecCol: String,
                          minSim: Double = 0.9, nlist: Int = 16,
                          kmeansIters: Int = 2, maxCell: Int = 4096,
                          trainSampleMod: Int = 1): DataFrame = {
     val spark = emb.sparkSession
-    val cos = graft.functions.VectorFunctions.cosineNative(spark) _
     val trainSet =
       if (trainSampleMod <= 1) emb
       else emb.filter(Curation.portableHash(col(keyCol)) % trainSampleMod === 0)
     val cent = Similarity.kmeansCentroids(trainSet, keyCol, vecCol, nlist, kmeansIters)
-    val assigned = spread(emb.select(col(keyCol).as("_id"), col(vecCol).as("_v")))
-      .join(broadcast(cent))
-      .select(col("_id"), col("cent_id"),
-        graft.functions.VectorFunctions.roundNative(spark)(cos(col("_v"), col("cvec")), 6).as("_s"))
-    val cells = Similarity.topKPerGroup(assigned, "_id", "_s", "cent_id", 1)
-      .select(col("_id"), col("cent_id"))
+    val cells = Similarity.nearestCells(
+      spread(emb.select(col(keyCol).as("_id"), col(vecCol).as("_v"))), "_id", "_v", cent, 1)
     // each side carries its vector's norm, computed once per VECTOR before
     // pairing — the per-pair verify then runs norm-factored (dot/(na·nb),
     // bit-identical to the inline cosine; see expressions.VecPrimitives)

@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 
 import graft.Present._
 import graft.Tables
+import graft.expressions.{CosineSimilarity, FastRound}
 import graft.functions.VectorFunctions
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -163,7 +165,7 @@ object Similarity {
               vecCol: String, k: Int, nPlanes: Int = 8,
               dim: Option[Int] = None): DataFrame = {
     // one scalar job over the (small) query side, not the corpus; memoized
-    // per (query identity, column) like the IVF centroids. An empty
+    // per (query identity, column) like the IVF cell lists. An empty
     // query set has no dim to discover — degrade to the (empty) result.
     val probed = dim.orElse(Option(dimCache.computeIfAbsent(
       (indexKey(queries), vecCol),
@@ -186,40 +188,79 @@ object Similarity {
     topKPerGroup(scored, "q_id", "sim", "n_id", k)
   }
 
-  /** K-means (Lloyd) centroid refinement, all DataFrame ops, deterministic
-    * and engine-portable:
+  /** K-means (Lloyd) centroid training, deterministic and engine-portable:
     *
     *  - seed centroids = the `nlist` corpus vectors of lowest portable-hash
     *    rank ([[Curation.portableHash]], key tiebreak) — distribution-free
     *    over any id space, cent_id = rank;
     *  - each iteration assigns every vector to its nearest centroid by the
-    *    6-decimal-rounded cosine (cent_id tiebreak), then recomputes per-cell
+    *    6-decimal-rounded cosine (cent_id tiebreak; NaN ranks above every
+    *    number, as Spark's sort orders it), then recomputes per-cell
     *    element-wise means, ALSO rounded to 6 decimals;
     *  - a cell that loses all members keeps its previous centroid.
     *
     * The rounding is what makes refinement reproducible: raw double means
-    * carry partition-order ULP jitter (across runs AND engines), but
+    * carry summation-order ULP jitter (across runs AND engines), but
     * collapse to the same 6-decimal value on continuous data, so every
     * downstream cosine sees bit-identical centroids — which is why q55
     * stays DuckDB-hash-oracled even with trained centroids.
     *
-    * Scale shape: per iteration, one broadcast of nlist×dim centroids, one
-    * argmax over the corpus, and one shuffle of (cent_id, pos, x) triples
-    * into nlist×dim groups (map-side partial agg collapses them early).
-    * Centroids themselves are bounded (nlist×dim doubles), so pinning them
-    * with a driver collect between iterations is O(KB) — it keeps the plan
-    * from recomputing the whole k-means lineage at every downstream use.
-    * At 100 TB you'd refine on a deterministic corpus sample; the iteration
-    * shape is unchanged.
+    * Scale shape: training is one Spark job, a collect of the training
+    * set's `(key, vector, hash)` rows, and the Lloyd iterations run on the
+    * driver over them. The training set is bounded by the caller's
+    * `trainSampleMod` slice ([[buildIvfIndex]],
+    * [[Dedup.semanticDedupPairs]]) and by `spark.driver.maxResultSize`,
+    * which fails an oversized collect. The result is an nlist-row local
+    * `(cent_id bigint, cvec array<double>)` frame.
     */
   def kmeansCentroids(corpus: DataFrame, keyCol: String, vecCol: String,
-                      nlist: Int = 16, iters: Int = 2): DataFrame =
-    // An IVF index is trained once and probed many times; memoizing on the
-    // corpus' identity (+ params) is the index registry. Training is fully
-    // deterministic, so a cache hit is exact, not approximate.
-    centroidCache.computeIfAbsent(
-      (indexKey(corpus), keyCol, vecCol, nlist, iters),
-      _ => trainCentroids(corpus, keyCol, vecCol, nlist, iters))
+                      nlist: Int = 16, iters: Int = 2): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val rows = corpus
+      .select(col(keyCol).cast("long"), col(vecCol).cast("array<double>"),
+        Curation.portableHash(col(keyCol)))
+      .collect()
+    // null keys sort first, as in an ascending Spark sort
+    def long(r: Row, i: Int) = if (r.isNullAt(i)) Long.MinValue else r.getLong(i)
+    val vecs = rows.map(r => if (r.isNullAt(1)) null
+      else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray))
+    var cent: Array[ArrayData] = rows.indices
+      .sortBy(i => (long(rows(i), 2), long(rows(i), 0))).take(nlist).map(vecs(_)).toArray
+    val dim = vecs.iterator.filter(_ != null).map(_.numElements()).maxOption.getOrElse(0)
+    (0 until iters).foreach { _ =>
+      // per cell and position: the members' sum and count, as avg groups them
+      val sums = Array.ofDim[Double](cent.length, dim)
+      val counts = Array.ofDim[Long](cent.length, dim)
+      val len = new Array[Int](cent.length)
+      vecs.foreach { v =>
+        if (v != null) {
+          // highest score wins, ties to the lower cent_id; a null centroid
+          // scores null, which ranks below every number
+          var best = -1
+          var bestS = 0.0
+          cent.indices.foreach { c =>
+            if (cent(c) != null) {
+              val s = FastRound.round(CosineSimilarity.fold(v, true, cent(c), true), 6)
+              if (best < 0 || cent(best) == null ||
+                  SQLOrderingUtil.compareDoubles(s, bestS) > 0) { best = c; bestS = s }
+            } else if (best < 0) best = c
+          }
+          val n = v.numElements()
+          (0 until n).foreach { p => sums(best)(p) += v.getDouble(p); counts(best)(p) += 1 }
+          len(best) = math.max(len(best), n)
+        }
+      }
+      cent = cent.indices.map { c =>
+        if (len(c) == 0) cent(c)
+        else UnsafeArrayData.fromPrimitiveArray(
+          Array.tabulate(len(c))(p => FastRound.round(sums(c)(p) / counts(c)(p), 6)))
+      }.toArray
+    }
+    cent.indices
+      .map(c => (c.toLong, Option(cent(c)).map(_.toDoubleArray().toSeq).orNull))
+      .toDF("cent_id", "cvec")
+  }
 
   /** Cache identity of an index input: session + semantic plan + the
     * on-disk signature of its file inputs. The data signature is what keeps
@@ -229,9 +270,6 @@ object Similarity {
   private def indexKey(df: DataFrame): (Int, Int, Long) =
     (System.identityHashCode(df.sparkSession),
       df.queryExecution.logical.semanticHash(), Inputs.dataSignature(df))
-
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    ((Int, Int, Long), String, String, Int, Int), DataFrame]()
 
   /** Materialized inverted lists per (corpus identity, params) — see
     * ivfTopK. Access-ordered and BOUNDED: distinct corpora would otherwise
@@ -253,58 +291,38 @@ object Similarity {
   private val dimCache =
     new java.util.concurrent.ConcurrentHashMap[((Int, Int, Long), String), Integer]()
 
-  private def trainCentroids(corpus: DataFrame, keyCol: String, vecCol: String,
-                             nlist: Int, iters: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
+  /** Every row of `df` scored against every centroid of `cent`: a
+    * broadcast join and the round-6 `graft_cosine` of `vecCol` against
+    * `cvec`, the rule [[kmeansCentroids]] assigns by. Returns `keep`,
+    * `cent_id` and the score `s`; each caller reduces it its own way.
+    */
+  private def centroidScores(df: DataFrame, vecCol: String, cent: DataFrame,
+                             keep: Column*): DataFrame = {
+    val spark = df.sparkSession
     val cos = VectorFunctions.cosineNative(spark) _
     val rnd = VectorFunctions.roundNative(spark) _
-    def pin(df: DataFrame): DataFrame = {
-      val rows = df.select(col("cent_id").cast("long"), col("cvec"))
-        .collect() // bounded: nlist rows × dim doubles
-        .map(r => (r.getLong(0), r.getSeq[Double](1)))
-        .sortBy(_._1)
-      spark.createDataset(rows.toIndexedSeq).toDF("cent_id", "cvec")
-    }
-    // Seeds = the nlist corpus vectors of LOWEST portable-hash rank
-    // (Knuth-multiplicative over the key, key tiebreak) — deterministic,
-    // engine-portable, and distribution-free: hashed/offset/sparse id
-    // spaces all yield exactly nlist seeds, where an absolute `key < nlist`
-    // threshold would yield none. orderBy+limit plans as a distributed
-    // top-k (TakeOrderedAndProject), not a global sort. cent_id = hash
-    // rank, assigned on the collected (bounded: nlist) seed rows.
-    var cent = {
-      val seedRows = corpus
-        .select(col(keyCol).cast("long").as("_k"),
-          col(vecCol).cast("array<double>").as("cvec"),
-          graft.operators.Curation.portableHash(col(keyCol)).as("_h"))
-        .orderBy(col("_h"), col("_k"))
-        .limit(nlist)
-        .collect() // bounded: nlist rows × dim doubles, in (_h, _k) order
-        .zipWithIndex
-        .map { case (r, i) => (i.toLong, r.getSeq[Double](1)) }
-      spark.createDataset(seedRows.toIndexedSeq).toDF("cent_id", "cvec")
-    }
-    (0 until iters).foreach { _ =>
-      val w = Window.partitionBy("_vid").orderBy(col("_s").desc, col("cent_id"))
-      val assigned = corpus.select(col(keyCol).as("_vid"), col(vecCol).as("_v"))
-        .join(broadcast(cent))
-        .select(col("_vid"), col("cent_id"), col("_v"),
-          rnd(cos(col("_v"), col("cvec")), 6).as("_s"))
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-      val means = assigned
-        .select(col("cent_id"), posexplode(col("_v").cast("array<double>")).as(Seq("pos", "x")))
-        .groupBy("cent_id", "pos")
-        .agg(rnd(avg(col("x")), 6).as("v"))
-      val refined = means.groupBy("cent_id")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-          s => s.getField("v")).as("cvec"))
-      cent = pin(cent.select(col("cent_id"), col("cvec").as("_old"))
-        .join(refined.select(col("cent_id"), col("cvec").as("_new")), Seq("cent_id"), "left")
-        .select(col("cent_id"), coalesce(col("_new"), col("_old")).as("cvec")))
-    }
-    cent
+    df.join(broadcast(cent))
+      .select(keep :+ col("cent_id") :+ rnd(cos(col(vecCol), col("cvec")), 6).as("s"): _*)
   }
+
+  /** The `n` nearest cells of each `(idCol, vecCol)` row: `(idCol, cent_id)`
+    * through the bounded-heap aggregate, tie order (s desc, cent_id asc) as
+    * a rank window would give. n = 1 assigns a vector to its cell; n =
+    * nprobe is a query's probe list.
+    */
+  private[operators] def nearestCells(df: DataFrame, idCol: String, vecCol: String,
+                                      cent: DataFrame, n: Int): DataFrame =
+    topKPerGroup(centroidScores(df, vecCol, cent, col(idCol)), idCol, "s", "cent_id", n)
+      .select(col(idCol), col("cent_id"))
+
+  /** Each query's `nprobe` nearest cells, `(q_id, cent_id)`: the probe
+    * list [[ivfTopK]], [[searchIvfIndex]] and [[searchCandidateCount]]
+    * expand against the cells.
+    */
+  private def probeList(queries: DataFrame, keyCol: String, vecCol: String,
+                        cent: DataFrame, nprobe: Int): DataFrame =
+    nearestCells(queries.select(col(keyCol).as("q_id"), col(vecCol)), "q_id", vecCol,
+      cent, nprobe)
 
   /** IVF-flat ANN: the corpus is partitioned into `nlist` cells by nearest
     * centroid; a query scores only vectors in its `nprobe` nearest cells.
@@ -323,29 +341,21 @@ object Similarity {
     val cos = VectorFunctions.cosineNative(corpus.sparkSession) _
     val rnd = VectorFunctions.roundNative(corpus.sparkSession) _
     val cent = kmeansCentroids(corpus, keyCol, vecCol, nlist, kmeansIters)
-    def assignments(df: DataFrame, idAs: String): DataFrame =
-      df.select(col(keyCol).as(idAs), col(vecCol))
-        .join(broadcast(cent))
-        .select(col(idAs), col("cent_id"),
-          rnd(cos(col(vecCol), col("cvec")), 6).as("s"))
-    // nearest-cell argmax + nprobe selection via the same bounded-heap
-    // aggregate (tie order s desc, cent_id asc — as a rank window would).
     // The inverted lists (corpus→cell map) are the OTHER half of the IVF
     // index: built once per (corpus, params) and pinned in executor memory,
-    // they serve every subsequent probe — index build amortizes across
-    // queries exactly like centroid training does.
+    // they serve every subsequent probe, so the index build amortizes
+    // across queries.
     val cells = cellCache.synchronized {
       val key = (indexKey(corpus), keyCol, vecCol, nlist, kmeansIters)
       Option(cellCache.get(key)).getOrElse {
-        val built = topKPerGroup(assignments(corpus, "c_id"), "c_id", "s", "cent_id", 1)
-          .select(col("c_id"), col("cent_id"))
+        val built = nearestCells(corpus.select(col(keyCol).as("c_id"), col(vecCol)),
+            "c_id", vecCol, cent, 1)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         cellCache.put(key, built)
         built
       }
     }
-    val probes = topKPerGroup(assignments(queries, "q_id"), "q_id", "s", "cent_id", nprobe)
-      .select(col("q_id"), col("cent_id"))
+    val probes = probeList(queries, keyCol, vecCol, cent, nprobe)
     val candidates = probes.join(cells, "cent_id")
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id").as("n_id"))
@@ -414,9 +424,7 @@ object Similarity {
     */
   private[graft] def ivfCellRowsFrom(spark: SparkSession, df: DataFrame, keyCol: String,
                                      vecCol: String, cent: DataFrame): DataFrame = {
-    val cos = VectorFunctions.cosineNative(spark) _
     val nrm = VectorFunctions.normNative(spark)(_)
-    val rnd = VectorFunctions.roundNative(spark) _
     // r20 (guide §2.4): the k=1 nearest-cell argmax is ONE declarative
     // aggregation — `max_by` over the `(s, -cent_id)` struct is exactly
     // TopKByScore's total order (higher score wins, ties to the smaller
@@ -425,10 +433,9 @@ object Similarity {
     // BEFORE the exchange, so the shuffled bytes match the old join-back's
     // df side). The old shape paid heap-topK + a join BACK to df: one more
     // exchange and a second scan of df per build/append.
-    df.select(col(keyCol).as("c_id"), col(vecCol).as("nv"), nrm(col(vecCol)).as("nn"))
-      .join(broadcast(cent))
-      .select(col("c_id"), col("nv"), col("nn"), col("cent_id"),
-        rnd(cos(col("nv"), col("cvec")), 6).as("s"))
+    centroidScores(
+        df.select(col(keyCol).as("c_id"), col(vecCol).as("nv"), nrm(col(vecCol)).as("nn")),
+        "nv", cent, col("c_id"), col("nv"), col("nn"))
       .groupBy("c_id")
       .agg(max_by(col("cent_id"), struct(col("s"), (-col("cent_id")).as("_t"))).as("cent_id"),
         first(col("nv")).as("nv"), first(col("nn")).as("nn"))
@@ -441,8 +448,10 @@ object Similarity {
     *
     * @param trainSampleMod when > 1, k-means trains on the
     *   `portableHash(key) % mod == 0` corpus slice (the q135 sampling
-    *   pattern) — the at-scale posture where `nlist` grows with the corpus
-    *   and full-corpus training would pay corpus × nlist per Lloyd pass.
+    *   pattern) — the at-scale posture. Training is one collect of the
+    *   training set plus driver-side Lloyd iterations
+    *   ([[kmeansCentroids]]), so the slice is what keeps the collect
+    *   inside `spark.driver.maxResultSize` and the driver's memory.
     */
   def buildIvfIndex(spark: SparkSession, corpus: DataFrame, keyCol: String,
                     vecCol: String, tag: String, nlist: Int = 16,
@@ -456,8 +465,8 @@ object Similarity {
     val trainSet =
       if (trainSampleMod <= 1) corpus
       else corpus.filter(Curation.portableHash(col(keyCol)) % trainSampleMod === 0)
-    // r19 (guide §2.6): the trained centroid frame is a pinned local
-    // dataset (nlist rows), so the cell assignment can run straight off it
+    // r19 (guide §2.6): the trained centroid frame is a local dataset
+    // (nlist rows), so the cell assignment can run straight off it
     // — no read-back of the just-written centroid table, and the two index
     // halves' writes carry no data dependency, so they run as concurrent
     // jobs (the cheap centroid write back-fills the bucketed cells write).
@@ -477,18 +486,10 @@ object Similarity {
                      vecCol: String, tag: String, k: Int = 3,
                      nprobe: Int = 4): DataFrame = {
     val (centTbl, cellsTbl) = ivfArtifactNames(tag)
-    val cos = VectorFunctions.cosineNative(spark) _
     val dot = VectorFunctions.dotNative(spark) _
     val nrm = VectorFunctions.normNative(spark)(_)
     val rnd = VectorFunctions.roundNative(spark) _
-    val cent = spark.table(centTbl)
-    val probes = topKPerGroup(
-      queries.select(col(keyCol).as("q_id"), col(vecCol))
-        .join(broadcast(cent))
-        .select(col("q_id"), col("cent_id"),
-          rnd(cos(col(vecCol), col("cvec")), 6).as("s")),
-      "q_id", "s", "cent_id", nprobe)
-      .select(col("q_id"), col("cent_id"))
+    val probes = probeList(queries, keyCol, vecCol, spark.table(centTbl), nprobe)
     // JOIN ORDER: attach each probe's query vector to the
     // (increment × nprobe)-row probe list BEFORE expanding against the
     // cells — joining the expanded (probe × cell-member) frame with the
@@ -559,16 +560,7 @@ object Similarity {
                            keyCol: String, vecCol: String, tag: String,
                            nprobe: Int = 4): Long = {
     val (centTbl, cellsTbl) = ivfArtifactNames(tag)
-    val cos = VectorFunctions.cosineNative(spark) _
-    val rnd = VectorFunctions.roundNative(spark) _
-    val cent = spark.table(centTbl)
-    topKPerGroup(
-      queries.select(col(keyCol).as("q_id"), col(vecCol))
-        .join(broadcast(cent))
-        .select(col("q_id"), col("cent_id"),
-          rnd(cos(col(vecCol), col("cvec")), 6).as("s")),
-      "q_id", "s", "cent_id", nprobe)
-      .select(col("q_id"), col("cent_id"))
+    probeList(queries, keyCol, vecCol, spark.table(centTbl), nprobe)
       .join(spark.table(cellsTbl).select("cent_id", "c_id"), "cent_id")
       .filter(col("q_id") =!= col("c_id"))
       .count()
