@@ -46,27 +46,24 @@ object TextSignatures {
   }
 
   /** MinHash band hashes of `text`'s distinct character k-shingles in one
-    * pass: no shingle array is materialized — each first-seen shingle updates
-    * all 64 signature minima, and the signature folds into `Bands` longs.
-    * Static so generated code can call it directly.
+    * pass with no allocation per shingle: each shingle is hashed in place
+    * and updates all 64 signature minima (a repeated shingle cannot lower a
+    * minimum, so no set of seen shingles is kept), and the signature folds
+    * into `Bands` longs. Static so generated code can call it directly.
     */
   def minhashBands(text: UTF8String, k: Int): ArrayData = {
     val s = text.toString
     val n = math.max(s.length - k + 1, 1)
-    val seen = new java.util.HashSet[String](math.min(n * 2, 1 << 16))
     val sig = new Array[Long](NumHashes)
     java.util.Arrays.fill(sig, Long.MaxValue)
     var i = 0
     while (i < n) {
-      val sh = s.substring(i, math.min(i + k, s.length))
-      if (seen.add(sh)) {
-        val h = scala.util.hashing.MurmurHash3.stringHash(sh) & 0x7fffffffL
-        var j = 0
-        while (j < NumHashes) {
-          val v = (coeffA(j) * h + coeffB(j)) % MersennePrime
-          if (v < sig(j)) sig(j) = v
-          j += 1
-        }
+      val h = shingleHash(s, i, math.min(i + k, s.length)) & 0x7fffffffL
+      var j = 0
+      while (j < NumHashes) {
+        val v = modMersenne(coeffA(j) * h + coeffB(j))
+        if (v < sig(j)) sig(j) = v
+        j += 1
       }
       i += 1
     }
@@ -80,6 +77,31 @@ object TextSignatures {
       bnd += 1
     }
     UnsafeArrayData.fromPrimitiveArray(bands)
+  }
+
+  /** `MurmurHash3.stringHash(s.substring(from, until))`, without the
+    * substring: the same char-pair mix over `s.charAt`.
+    */
+  private def shingleHash(s: String, from: Int, until: Int): Int = {
+    import scala.util.hashing.MurmurHash3.{finalizeHash, mix, mixLast, stringSeed}
+    var h = stringSeed
+    var i = from
+    while (i + 1 < until) {
+      h = mix(h, (s.charAt(i) << 16) + s.charAt(i + 1))
+      i += 2
+    }
+    if (i < until) h = mixLast(h, s.charAt(i).toInt)
+    finalizeHash(h, until - from)
+  }
+
+  /** `x % MersennePrime` for 0 ≤ x < 2^62 (a, h and b are all below 2^31):
+    * 2^31 ≡ 1 (mod p), so two folds of the high bits onto the low 31 leave
+    * a value of at most p + 1, and one subtract finishes the reduction.
+    */
+  private def modMersenne(x: Long): Long = {
+    var r = (x & MersennePrime) + (x >>> 31)
+    r = (r & MersennePrime) + (r >>> 31)
+    if (r >= MersennePrime) r - MersennePrime else r
   }
 
   /** 64-bit SimHash of a token array: per-bit vote sum over a 64-bit token

@@ -132,7 +132,7 @@ class SimilaritySpec extends AnyFunSuite {
     // cluster, the worst case Lloyd refinement exists to fix
     def cluster(center: Int, n: Int, base: Long) = (0 until n).map { i =>
       (base + i, Array.tabulate(32) { d =>
-        (math.cos(center * 97 + d) + 0.05 * math.sin((base + i) * 13 + d)).toFloat
+        (math.cos(center * 97 + d) + 0.05 * math.sin(((base + i) * 13 + d).toDouble)).toFloat
       })
     }
     val corpus = cluster(1, 60, 0L) ++ cluster(2, 60, 60L) ++ cluster(3, 60, 120L)

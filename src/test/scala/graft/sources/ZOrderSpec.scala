@@ -31,8 +31,8 @@ class ZOrderSpec extends AnyFunSuite {
     val back = spark.read.parquet(dir)
     // lossless: same multiset of orders
     assert(back.count() == orders.count())
-    assert(back.agg(sum("o_orderkey")).head.getLong(0) ==
-      orders.agg(sum("o_orderkey")).head.getLong(0))
+    assert(back.agg(sum("o_orderkey")).head().getLong(0) ==
+      orders.agg(sum("o_orderkey")).head().getLong(0))
     // per-file rectangles: on the z-curve, each of the 16 files covers a
     // bounded rectangle in (d1, d2) — the mean per-file span of EACH
     // dimension must be well under the global span (a single-key range
@@ -42,7 +42,7 @@ class ZOrderSpec extends AnyFunSuite {
     def meanSpan(dim: String): Double = {
       val spans = files.map { f =>
         val r = spark.read.parquet(f)
-          .agg(min(col(dim)).as("lo"), max(col(dim)).as("hi")).head
+          .agg(min(col(dim)).as("lo"), max(col(dim)).as("hi")).head()
         (r.getInt(1) - r.getInt(0)).toDouble
       }
       spans.sum / spans.length

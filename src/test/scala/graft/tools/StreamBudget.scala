@@ -30,11 +30,11 @@ object StreamBudget {
     val sfDir = args(0)
     val perSf = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(new java.io.File("STREAM_BUDGET.json")).get("per_sf")
-    val (tag, entry) = perSf.fields().asScala.map(e => e.getKey -> e.getValue)
+    val (tag, entry) = perSf.properties().asScala.map(e => e.getKey -> e.getValue)
       .find { case (t, _) => sfDir.contains(t) }
       .getOrElse(sys.error(s"no STREAM_BUDGET.json per_sf tag matches $sfDir " +
         s"(tags: ${perSf.fieldNames().asScala.mkString(", ")})"))
-    val budgets = entry.get("budgets_s").fields().asScala
+    val budgets = entry.get("budgets_s").properties().asScala
       .map(e => e.getKey -> e.getValue.asDouble()).toSeq.sortBy(_._1)
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
