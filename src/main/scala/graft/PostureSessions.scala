@@ -50,19 +50,13 @@ object PostureSessions {
   private val MaxPosturesPerCaller = 12
 
   private val cache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[Map[String, String], SparkSession]]()
+    new SessionMemo(scala.collection.mutable.Map.empty[Map[String, String], SparkSession])
 
-  def apply(caller: SparkSession, posture: Map[String, String]): SparkSession =
-    cache.synchronized {
-      val perCaller = {
-        val m = cache.get(caller)
-        if (m != null) m
-        else {
-          val m2 = scala.collection.mutable.Map.empty[Map[String, String], SparkSession]
-          cache.put(caller, m2)
-          m2
-        }
-      }
+  def apply(caller: SparkSession, posture: Map[String, String]): SparkSession = {
+    val perCaller = cache(caller)
+    // The caller's own lock covers the bound check and the clone creation,
+    // so two threads never build two clones of one posture.
+    perCaller.synchronized {
       perCaller.getOrElseUpdate(posture, {
         require(perCaller.size < MaxPosturesPerCaller,
           s"PostureSessions: caller already holds ${perCaller.size} memoized " +
@@ -80,4 +74,5 @@ object PostureSessions {
         s2
       })
     }
+  }
 }

@@ -71,9 +71,8 @@ import org.apache.spark.sql.functions.col
   * clusters with ≥2× margin on both sides.
   *
   * Both shapes produce identical rows in identical order (pinned by spec).
-  * The rule binds at PLAN-BUILD time — plan caches must key on the
-  * threshold (SparkEntry.planCache does) or a mid-session change would
-  * silently keep the previously built sort shape.
+  * The rule binds at PLAN-BUILD time: a threshold changed mid-session
+  * reaches the plans built after the change, not a plan already built.
   */
 object Present {
   /** Measured range-vs-merge crossover in un-reduced fan-in rows (see

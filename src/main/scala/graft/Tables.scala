@@ -33,8 +33,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     // fresh staged layout AND a fresh cached DataFrame — the stale entry for
     // the old path simply goes unreferenced.
     val path = Tables.stagedPath(spark, dir, name)
-    Tables.cache.computeIfAbsent((System.identityHashCode(spark), path),
-      _ => spark.read.parquet(path))
+    Tables.cache(spark).computeIfAbsent(path, _ => spark.read.parquet(path))
   }
 
   def region: DataFrame = table("region")
@@ -71,8 +70,9 @@ object Tables {
     raw.withColumn("ts_us", tsUs).drop("ts")
   }
 
+  /** Per session: staged path → its DataFrame. */
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
+    new SessionMemo(new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
 
   /** Scratch root for staged table layouts — see [[StageDir.scratchBase]]. */
   private[graft] def scratchBase: String = StageDir.scratchBase

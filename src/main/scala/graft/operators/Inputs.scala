@@ -33,22 +33,6 @@ private[graft] object Inputs {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** Best-effort signature of a plan's file inputs (sorted `path:size:mtime`
-    * FNV hash). A source file regenerated IN PLACE keeps the same logical
-    * plan (same path ⇒ same `semanticHash`), so any cache keyed purely on
-    * the plan would serve stale results — folding the on-disk signature into
-    * the key makes such caches self-invalidating. Non-file inputs contribute
-    * just their path string; stat failures degrade to the path too.
-    */
-  def dataSignature(df: DataFrame): Long =
-    df.inputFiles.sorted.foldLeft(1469598103934665603L) { (h, f) =>
-      val entry = try {
-        val p = java.nio.file.Paths.get(new java.net.URI(f))
-        s"$f:${java.nio.file.Files.size(p)}:${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-      } catch { case _: Exception => f }
-      entry.foldLeft(h)((a, c) => (a ^ c) * 1099511628211L)
-    }
-
   /** Runs independent actions (typically writes of independent artifacts)
     * concurrently and rethrows the first failure after all complete —
     * guide §2.6: Spark happily schedules several jobs at once, and a cheap

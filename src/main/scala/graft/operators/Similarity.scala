@@ -164,13 +164,10 @@ object Similarity {
   def lshTopK(queries: DataFrame, corpus: DataFrame, keyCol: String,
               vecCol: String, k: Int, nPlanes: Int = 8,
               dim: Option[Int] = None): DataFrame = {
-    // one scalar job over the (small) query side, not the corpus; memoized
-    // per (query identity, column) like the IVF cell lists. An empty
+    // one scalar job over the (small) query side, not the corpus. An empty
     // query set has no dim to discover — degrade to the (empty) result.
-    val probed = dim.orElse(Option(dimCache.computeIfAbsent(
-      (indexKey(queries), vecCol),
-      _ => queries.select(size(col(vecCol))).limit(1).collect().headOption
-        .map(r => Integer.valueOf(r.getInt(0))).orNull)).map(_.intValue))
+    val probed = dim.orElse(
+      queries.select(size(col(vecCol))).limit(1).collect().headOption.map(_.getInt(0)))
     val d = probed.getOrElse {
       return queries.select(col(keyCol).as("q_id"), lit(1).as("rnk"),
         col(keyCol).as("n_id"), lit(0.0).as("sim")).limit(0)
@@ -262,35 +259,6 @@ object Similarity {
       .toDF("cent_id", "cvec")
   }
 
-  /** Cache identity of an index input: session + semantic plan + the
-    * on-disk signature of its file inputs. The data signature is what keeps
-    * a long-lived session honest — a corpus file regenerated in place keeps
-    * its plan hash, but not its size/mtime (see [[Inputs.dataSignature]]).
-    */
-  private def indexKey(df: DataFrame): (Int, Int, Long) =
-    (System.identityHashCode(df.sparkSession),
-      df.queryExecution.logical.semanticHash(), Inputs.dataSignature(df))
-
-  /** Materialized inverted lists per (corpus identity, params) — see
-    * ivfTopK. Access-ordered and BOUNDED: distinct corpora would otherwise
-    * accumulate pinned executor storage without limit, so the eldest entry
-    * is unpersisted and dropped once the cache passes `maxCachedCellSets`.
-    */
-  private val maxCachedCellSets = 8
-  private val cellCache = new java.util.LinkedHashMap[
-      ((Int, Int, Long), String, String, Int, Int), DataFrame](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[((Int, Int, Long), String, String, Int, Int), DataFrame])
-        : Boolean =
-      size > maxCachedCellSets && {
-        try e.getValue.unpersist(blocking = false) catch { case _: Exception => () }
-        true
-      }
-  }
-
-  private val dimCache =
-    new java.util.concurrent.ConcurrentHashMap[((Int, Int, Long), String), Integer]()
-
   /** Every row of `df` scored against every centroid of `cent`: a
     * broadcast join and the round-6 `graft_cosine` of `vecCol` against
     * `cvec`, the rule [[kmeansCentroids]] assigns by. Returns `keep`,
@@ -342,19 +310,11 @@ object Similarity {
     val rnd = VectorFunctions.roundNative(corpus.sparkSession) _
     val cent = kmeansCentroids(corpus, keyCol, vecCol, nlist, kmeansIters)
     // The inverted lists (corpus→cell map) are the OTHER half of the IVF
-    // index: built once per (corpus, params) and pinned in executor memory,
-    // they serve every subsequent probe, so the index build amortizes
-    // across queries.
-    val cells = cellCache.synchronized {
-      val key = (indexKey(corpus), keyCol, vecCol, nlist, kmeansIters)
-      Option(cellCache.get(key)).getOrElse {
-        val built = nearestCells(corpus.select(col(keyCol).as("c_id"), col(vecCol)),
-            "c_id", vecCol, cent, 1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cellCache.put(key, built)
-        built
-      }
-    }
+    // index, built here for this one search. A caller that searches one
+    // corpus again and again builds both halves once with [[buildIvfIndex]]
+    // and probes them with [[searchIvfIndex]].
+    val cells = nearestCells(corpus.select(col(keyCol).as("c_id"), col(vecCol)),
+      "c_id", vecCol, cent, 1)
     val probes = probeList(queries, keyCol, vecCol, cent, nprobe)
     val candidates = probes.join(cells, "cent_id")
       .filter(col("q_id") =!= col("c_id"))

@@ -35,7 +35,7 @@ object Sketches {
     import spark.implicits._
     val bin = df.agg(
       count_min_sketch(col(keyCol), lit(eps), lit(confidence), lit(seed)).as("s"))
-      .head.getAs[Array[Byte]]("s")
+      .head().getAs[Array[Byte]]("s")
     val cms = CountMinSketch.readFrom(new ByteArrayInputStream(bin))
     probes.sorted.map(k => (k, cms.estimateCount(java.lang.Long.valueOf(k))))
       .toDF(keyCol, "est")

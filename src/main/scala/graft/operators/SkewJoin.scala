@@ -47,42 +47,19 @@ object SkewJoin {
                         maxKeyShare: Double = 0.05,
                         sampleFraction: Double = 1e-3,
                         minSample: Long = 1000L): DataFrame = {
-    // Key-distribution stats are a property of the DATA, not the query —
-    // a real deployment collects them once per table (ANALYZE-style), so
-    // the measured share is memoized per (logical plan, key). Same
-    // session-lifetime precedent as the cached ANN index halves.
-    // Probe OUTSIDE the map's bin lock + putIfAbsent, not computeIfAbsent
-    // (ADVICE r12): running a Spark job inside computeIfAbsent held the
-    // bin lock for the job's duration, blocking concurrent plan builds on
-    // colliding keys; a lost race costs one redundant bounded probe, which
-    // is cheaper than serializing every plan build behind a job. The cache
-    // is also size-capped: both paths are result-identical, so evicting
-    // (or keeping a stale) entry is a perf decision, never a correctness
-    // one — but an unbounded per-plan map in a long-lived session is a
-    // leak. Callers whose data changed re-probe by passing a re-read frame
-    // (new logical plan → new key).
-    val statsKey = (big.queryExecution.analyzed.semanticHash(), bigKey)
-    val share = Option(shareCache.get(statsKey)).map(_.doubleValue()).getOrElse {
-      val probe = big.select(col(bigKey))
-        .sample(withReplacement = false, sampleFraction, seed = 42)
-        .groupBy(bigKey).agg(count(lit(1)).as("c"))
-        .agg(max(col("c")).as("mx"), sum(col("c")).as("tot"))
-        .collect()(0) // bounded: exactly one row
-      val (mx, tot) =
-        (Option(probe.get(0)).fold(0L)(_.asInstanceOf[Long]),
-         Option(probe.get(1)).fold(0L)(_.asInstanceOf[Long]))
-      val s = if (tot >= minSample) mx.toDouble / tot else 0.0
-      if (shareCache.size() >= shareCacheMax) shareCache.clear() // cap, not LRU: probes are cheap
-      shareCache.putIfAbsent(statsKey, java.lang.Double.valueOf(s))
-      s
-    }
+    // One bounded probe job per call, run while the plan is built.
+    val probe = big.select(col(bigKey))
+      .sample(withReplacement = false, sampleFraction, seed = 42)
+      .groupBy(bigKey).agg(count(lit(1)).as("c"))
+      .agg(max(col("c")).as("mx"), sum(col("c")).as("tot"))
+      .collect()(0) // bounded: exactly one row
+    val (mx, tot) =
+      (Option(probe.get(0)).fold(0L)(_.asInstanceOf[Long]),
+       Option(probe.get(1)).fold(0L)(_.asInstanceOf[Long]))
+    val share = if (tot >= minSample) mx.toDouble / tot else 0.0
     if (share > maxKeyShare) saltedInnerJoin(big, small, bigKey, smallKey, nSalts)
     else big.join(small, col(bigKey) === col(smallKey))
   }
-
-  private val shareCacheMax = 1024
-  private val shareCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), java.lang.Double]()
 
   // ------------------------------------------------------- declared queries
 

@@ -205,20 +205,19 @@ object ScaleLayouts {
     * in-memory catalog is session-scoped; the overwrite keeps stale
     * warehouse files from a previous JVM from leaking in).
     */
-  // Keyed on the session OBJECT (a WeakHashMap — identityHashCode collides
-  // after GC reuses addresses), and a dir is marked done only AFTER both
-  // bucketed writes succeed: marking up front would make every later q89
-  // call in the session skip re-creation and join against missing/partial
-  // tables if a write threw. The map-level lock also serializes concurrent
-  // first calls, so a second thread can't read half-written tables.
-  private val bucketedFor =
-    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]()
+  // A dir is marked done only AFTER both bucketed writes succeed: marking
+  // up front would make every later q89 call in the session skip
+  // re-creation and join against missing/partial tables if a write threw.
+  // One lock over both writes, taken by every session because the table
+  // names carry only the dir, serializes concurrent first calls, so a
+  // second thread can't read half-written tables.
+  private val bucketedFor = new graft.SessionMemo(new java.util.HashSet[String]())
 
   private def ensureBucketed(s: SparkSession, dir: String): (String, String) = {
     val tag = Integer.toHexString(dir.hashCode)
     val (to, tc) = (s"graft_bkt_orders_x$tag", s"graft_bkt_customer_x$tag")
+    val done = bucketedFor(s)
     bucketedFor.synchronized {
-      val done = bucketedFor.computeIfAbsent(s, _ => new java.util.HashSet[String]())
       if (!done.contains(dir)) {
         Seq(to, tc).foreach(graft.StageDir.dropManagedTable(s, _))
         val t = graft.Tables(s, dir)

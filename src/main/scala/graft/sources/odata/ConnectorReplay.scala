@@ -100,7 +100,7 @@ object ConnectorReplay {
       // bounded replay-staging collect (≤ ~2 MB at sf0.1), documented above;
       // one pass carries the JSON row plus the segment for the filtered family
       val collected = df
-        .select(to_json(struct(df.columns.map(col): _*)).as("j"), col("c_mktsegment").as("seg"))
+        .select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("j"), col("c_mktsegment").as("seg"))
         .collect()
       val rows = collected.map(_.getString(0))
       val building = collected.filter(_.getString(1) == PushedSegment).map(_.getString(0))

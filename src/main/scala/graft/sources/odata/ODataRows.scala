@@ -58,7 +58,7 @@ object ODataRows {
     */
   def inferSchema(rows: JsonNode, declared: Map[String, DataType] = Map.empty): StructType = {
     val types = scala.collection.mutable.Map.empty[String, DataType]
-    rows.elements().asScala.foreach(_.fields().asScala.foreach { e =>
+    rows.elements().asScala.foreach(_.properties().asScala.foreach { e =>
       val v = e.getValue
       val t =
         if (v.isNull) NullType

@@ -72,7 +72,7 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
     "ValueAttribute" -> StringType, "StringValue" -> StringType)
 
   private def flatValues(payload: JsonNode): Map[String, String] = {
-    val it = payload.fields()
+    val it = payload.properties().iterator()
     val b = Map.newBuilder[String, String]
     while (it.hasNext) {
       val e = it.next()

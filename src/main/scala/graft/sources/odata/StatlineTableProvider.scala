@@ -41,14 +41,24 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 class StatlineTableProvider extends TableProvider {
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val ctx = StatlineScanContext.resolve(options.asCaseSensitiveMap().asScala.toMap)
-    ctx.schema
+  // Spark builds one provider per load() and calls inferSchema, then
+  // getTable, on it with the same options. Resolution costs ~5 round trips,
+  // so the pair shares one context, which also keeps the schema and the
+  // pagination plan from racing a source change between the two calls. The
+  // next load resolves the source again.
+  private var ctx: StatlineScanContext = _
+
+  private def resolve(opts: Map[String, String]): StatlineScanContext = {
+    if (ctx == null) ctx = StatlineScanContext.fromOptions(opts)
+    ctx
   }
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    resolve(options.asCaseSensitiveMap().asScala.toMap).schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new StatlineTable(schema, StatlineScanContext.resolve(properties.asScala.toMap))
+    new StatlineTable(schema, resolve(properties.asScala.toMap))
 
   override def supportsExternalMetadata(): Boolean = true
 }
@@ -70,16 +80,6 @@ private[odata] final case class StatlineScanContext(
 
 private[graft] object StatlineScanContext {
 
-  // Spark calls inferSchema and getTable back-to-back with the same options;
-  // resolution costs ~5 network round trips, so memoize per options map
-  // (also keeps the schema and the pagination plan from racing a source
-  // change between the two calls).
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[Map[String, String], StatlineScanContext]()
-
-  private[odata] def resolve(opts: Map[String, String]): StatlineScanContext =
-    cache.computeIfAbsent(opts, fromOptions)
-
   /** A replay client over a JSON index of url → payload file (paths
     * relative to the index), or the live client.
     */
@@ -89,9 +89,7 @@ private[graft] object StatlineScanContext {
       val node = mapper.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
       val base = java.nio.file.Paths.get(path).toAbsolutePath.getParent
       val m = Map.newBuilder[String, String]
-      val it = node.fields()
-      while (it.hasNext) {
-        val e = it.next()
+      node.properties().asScala.foreach { e =>
         m += (e.getKey -> java.nio.file.Files.readString(base.resolve(e.getValue.asText())))
       }
       ReplayClient(m.result())

@@ -34,14 +34,11 @@ object EventStreams {
   private val runId = new AtomicLong(0)
 
   /** Memory-sink view names from prior replays, dropped on the next replay
-    * of the SAME session (keyed by the session OBJECT so distinct sessions
-    * can never collide; weak keys let a closed session's entry go with it).
-    * Replays are driven sequentially per session — Verify, perfbench and
-    * the specs all consume a replay's result before starting the next.
+    * of the SAME session. Replays are driven sequentially per session —
+    * Verify, perfbench and the specs all consume a replay's result before
+    * starting the next.
     */
-  private val staleSinks =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Buffer[String]]())
+  private val staleSinks = new graft.SessionMemo(scala.collection.mutable.Buffer.empty[String])
 
   /** Scratch root for replay staging + throwaway checkpoints (tmpfs when
     * available). A replay writes dozens of small files (offset/commit WAL,
@@ -87,7 +84,7 @@ object EventStreams {
   private[graft] def contentSig(fresh: DataFrame): String = {
     val row = fresh.agg(
       count(lit(1)).as("n"),
-      sum(xxhash64(fresh.columns.map(col): _*)
+      sum(xxhash64(fresh.columns.map(col).toIndexedSeq: _*)
         .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("h")).head()
     s"${row.getLong(0)}.${Option(row.get(1)).getOrElse(0L)}"
   }
@@ -221,8 +218,7 @@ object EventStreams {
     // Replay sinks are consumed immediately by the caller; earlier replays'
     // memory tables would otherwise pin their rows for the session lifetime
     // (a bench/verify run does dozens of replays).
-    val sessionSinks = staleSinks.computeIfAbsent(
-      spark, _ => scala.collection.mutable.Buffer.empty[String])
+    val sessionSinks = staleSinks(spark)
     sessionSinks.synchronized {
       sessionSinks.foreach(spark.catalog.dropTempView(_))
       sessionSinks.clear()

@@ -17,7 +17,7 @@ class QueriesSmokeSpec extends AnyFunSuite {
     val o = SparkEntry.oracleSql
     assert((o.keySet -- q.keySet).isEmpty, s"oracles without queries: ${o.keySet -- q.keySet}")
     // the bench must measure exactly the certified surface
-    assert(SparkEntry.freshQueries.keySet == q.keySet)
+    assert(SparkEntry.freshQueries eq SparkEntry.queries)
     val allKeys = Seq(
       Relational.queries.keys, operators.AsOfJoin.queries.keys,
       operators.Dedup.queries.keys, operators.Similarity.queries.keys,

@@ -71,4 +71,16 @@ class TablesStagingSpec extends AnyFunSuite {
     assert(r.inputFiles.forall(_.contains("region.parquet")),
       s"a small directory fixture must not stage, got ${r.inputFiles.head}")
   }
+
+  test("table reads are kept per session: reused within one, never shared") {
+    val s1 = spark
+    val s2 = s1.newSession()
+    val a = Tables(s1, TestSpark.Sf0001).table("orders")
+    assert(Tables(s1, TestSpark.Sf0001).table("orders") eq a)
+    val b = Tables(s2, TestSpark.Sf0001).table("orders")
+    assert(!(b eq a))
+    assert(a.sparkSession eq s1)
+    assert(b.sparkSession eq s2)
+    assert(Tables(s2, TestSpark.Sf0001).table("orders") eq b)
+  }
 }

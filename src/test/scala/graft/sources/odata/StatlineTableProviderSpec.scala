@@ -187,6 +187,52 @@ class StatlineTableProviderSpec extends AnyFunSuite {
     assert(ODataFilters.translate(And(EqualTo("A", 1), StringContains("B", "x"))).isEmpty)
   }
 
+  test("DSv2: a rewritten source is resolved again on the next load") {
+    val dir = Files.createTempDirectory("graft_dsv2_rewrite")
+    val tablesUrl =
+      s"https://opendata.cbs.nl/ODataCatalog/Tables?$$format=json&$$filter=Identifier eq '$id'"
+    val typedUrl = s"$base/TypedDataSet?$$format=json"
+    def csdl(props: String*) =
+      """<edmx:Edmx xmlns:edmx="x"><edmx:DataServices><Schema xmlns="y"><EntityType Name="TData">""" +
+        props.map(p => s"""<Property Name="$p" Type="Edm.Int32"/>""").mkString +
+        "</EntityType></Schema></edmx:DataServices></edmx:Edmx>"
+    // the index and its payload files, written at the same paths each time
+    def publish(payloads: Seq[(String, String)]): String = {
+      val index = payloads.zipWithIndex.map { case ((url, content), i) =>
+        Files.writeString(dir.resolve(s"r$i.json"), content)
+        s""""${url.replace("\"", "\\\"")}": "r$i.json""""
+      }.mkString("{", ",", "}")
+      Files.writeString(dir.resolve("index.json"), index)
+      dir.resolve("index.json").toString
+    }
+    def load(idx: String) = spark.read.format("graft.sources.odata.StatlineTableProvider")
+      .option("id", id).option("table", "TypedDataSet").option("replayIndex", idx)
+      .load()
+    def catalog(records: Int) =
+      s"""{"value":[{"Identifier":"$id","Modified":"2024-01-01","RecordCount":$records,"ColumnCount":2}]}"""
+    val datasets = s"""{"value":[{"name":"TypedDataSet","url":"$base/TypedDataSet"}]}"""
+
+    val idx = publish(Seq(
+      tablesUrl -> catalog(2),
+      s"$base?$$format=json" -> datasets,
+      s"$base/$$metadata" -> csdl("ID", "Waarde"),
+      typedUrl -> """{"value":[{"ID":1,"Waarde":10},{"ID":2,"Waarde":20}]}"""))
+    val before = load(idx)
+    assert(before.schema.fieldNames.toSeq == Seq("ID", "Waarde"))
+    assert(before.collect().length == 2)
+
+    // one more column, and 15000 records ⇒ a second page
+    assert(publish(Seq(
+      tablesUrl -> catalog(15000),
+      s"$base?$$format=json" -> datasets,
+      s"$base/$$metadata" -> csdl("ID", "Waarde", "Extra"),
+      typedUrl -> """{"value":[{"ID":1,"Waarde":10,"Extra":5},{"ID":2,"Waarde":20,"Extra":6}]}""",
+      s"$typedUrl&$$skip=10000" -> """{"value":[{"ID":3,"Waarde":30,"Extra":7}]}""")) == idx)
+    val after = load(idx)
+    assert(after.schema == StructType(Seq("ID", "Waarde", "Extra").map(StructField(_, IntegerType))))
+    assert(after.orderBy("ID").collect().map(_.getInt(2)).toSeq == Seq(5, 6, 7))
+  }
+
   test("DSv2: dimension table schema is first-page inferred") {
     val idx = writeFixture()
     val df = spark.read.format("graft.sources.odata.StatlineTableProvider")
