@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.Present._
 import graft.Tables
@@ -17,13 +17,14 @@ import graft.functions.VectorFunctions
   *    only shuffle is by `text` hash, with map-side partial aggregation.
   *  - '''MinHash + LSH''': signatures are computed scan-side by the native
   *    codegen expression [[graft.expressions.MinHashBands]] (no UDF, no
-  *    materialized shingle arrays), then candidates come from a self-join
-  *    on (band, band-hash) buckets — the classic band trick keeps the join
-  *    key space dense and bounded instead of an O(n²) cross join; verification
+  *    materialized shingle arrays), then candidates are the pairs within
+  *    each (band, band-hash) bucket, found by one sorted pass over the
+  *    bucket-partitioned rows — the classic band trick keeps the work
+  *    bounded by bucket sizes instead of an O(n²) cross join; verification
   *    (exact Jaccard) touches only candidate pairs.
   *  - '''SimHash''': 64-bit signature from per-token hashed bit votes;
   *    near-dup pairs share at least one of 4 16-bit chunks (Hamming ≤ 3 over
-  *    64 bits ⇒ pigeonhole guarantees a shared chunk), again a bucket join.
+  *    64 bits ⇒ pigeonhole guarantees a shared chunk), again bucket pairs.
   *  - '''n-gram Jaccard''': exact character-shingle similarity for a bounded
   *    candidate set (here keyed small; at scale fed by the LSH candidates).
   *  - '''embedding cosine''': near-dup by cosine ≥ τ over a bounded/blocked
@@ -59,18 +60,6 @@ object Dedup {
 
   // ------------------------------------------------ hot-bucket bounding
 
-  /** Adds per-bucket rank (`_rn`, by ascending key) and population
-    * (`_bsz`) to a bucketed signature table — the bookkeeping
-    * [[boundedCandidates]] needs to bound hot buckets. One exchange on the
-    * bucket key, the same partitioning the candidate self-join uses.
-    */
-  private def withBucketRank(df: DataFrame, keyCol: String,
-                             bucketCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(bucketCols.map(col): _*)
-    df.withColumn("_rn", row_number().over(w.orderBy(col(keyCol))))
-      .withColumn("_bsz", count(lit(1)).over(w))
-  }
-
   /** Eagerly `localCheckpoint`s `input` when `source`'s at-rest size
     * estimate is at or under `maxBytes`, else returns it unchanged (the
     * consumers recompute it). Gate stats come from the raw source scan
@@ -85,71 +74,79 @@ object Dedup {
       input.localCheckpoint(true)
     else input
 
-  /** Candidate-stage input materialization gate (r19), 64 MiB at rest.
-    * [[boundedCandidates]] consumes its signature table FOUR times (a/b
-    * sides of the in-cap self-join + a/b sides of the chain leg), and
-    * neither exchange reuse nor AQE stage reuse unifies the four identical
-    * subtrees at runtime (measured on q124: zero reused exchanges — the
-    * scan + signature kernel ran once per consumer). An EAGER
-    * localCheckpoint collapses them to one computation and wins (q124 med
-    * 0.647 → 0.452 s at sf0.1, CandidateCacheAB); a LAZY MEMORY_AND_DISK
-    * persist of the same frame LOSES (med 0.734 — columnar encode/decode
-    * of the payload plus the cache boundary's AQE restrictions cost more
-    * than the recomputes), so the checkpoint is the shipped form.
-    */
-  private val CandidateCheckpointMaxBytes = 64L << 20
-
   /** [[containmentPairs]]' gram-table materialization gate (r16/r19),
     * 16 MiB at rest; the measurements are in its body.
     */
   private val GramCheckpointMaxBytes = 16L << 20
 
   /** Within-bucket candidate pairs with a HOT-BUCKET bound. Buckets at or
-    * under `maxBucket` pair exhaustively (`a < b`) exactly as before; an
-    * OVER-cap bucket — a degenerate signature flood: empty/boilerplate
-    * text, an identical-vector pile — emits CHAIN pairs instead (each key
-    * with its successor in key order): `m−1` pairs rather than
-    * `m(m−1)/2`, so one bad bucket costs linear work instead of going
-    * quadratic, while the flood class stays fully CONNECTED for the
-    * clustering/gate step (successive members of a same-content class
-    * verify against each other like any other pairing; `duplicateClusters`
-    * closes the chain transitively). The caps default far above any
-    * organically-occurring bucket (measured at 500k ciphered docs —
-    * `53724f9:SCALE100.json` `bucket_histograms`: minhash band max 26, simhash
-    * chunk max 752 and flattening, embedding bucket max 20 at sf0.1 —
-    * hence 1024 defaults, 4096 for the deliberately-dense simhash
-    * chunks), so certified outputs are unchanged — the bound exists for
-    * the 100 TB failure mode, where a boilerplate class of 10⁶ docs must
-    * not cost 10¹² joined rows.
+    * under `maxBucket` pair exhaustively (`a < b`); an OVER-cap bucket — a
+    * degenerate signature flood: empty/boilerplate text, an
+    * identical-vector pile — emits CHAIN pairs instead (each key with its
+    * successor in key order): `m−1` pairs rather than `m(m−1)/2`, so one
+    * bad bucket costs linear work instead of going quadratic, while the
+    * flood class stays fully CONNECTED for the clustering/gate step
+    * (successive members of a same-content class verify against each
+    * other like any other pairing; `duplicateClusters` closes the chain
+    * transitively). The caps default far above any organically-occurring
+    * bucket (measured at 500k ciphered docs — `53724f9:SCALE100.json`
+    * `bucket_histograms`: minhash band max 26, simhash chunk max 752 and
+    * flattening, embedding bucket max 20 at sf0.1 — hence 1024 defaults,
+    * 4096 for the deliberately-dense simhash chunks), so certified outputs
+    * are unchanged — the bound exists for the 100 TB failure mode, where a
+    * boilerplate class of 10⁶ docs must not cost 10¹² pairs.
     *
-    * Join-input restriction, not post-filter: the chain side joins on
-    * `bucket ∪ rank`, so the quadratic row set is never materialized
-    * inside the join.
+    * Scale shape: one exchange and one sorted pass. Rows are
+    * hash-partitioned on the bucket and sorted by `(bucket, key)` within
+    * each partition, so every bucket arrives whole and in key order; the
+    * pass buffers at most `maxBucket + 1` rows of it. A bucket that ends
+    * within the cap emits every pair whose keys are both non-null and
+    * unequal (`a < b`). Once the buffer passes the cap, the pass emits the
+    * adjacent pairs of the buffer and streams the rest of the bucket, each
+    * row paired with the one before it; a chain pairs every row, a null key
+    * (sorted first) included. Rows with a null bucket value pair with
+    * nothing, as in an equi-join on the bucket. The partition count is the
+    * session's `spark.sql.shuffle.partitions`, passed explicitly: AQE
+    * coalesces a by-column repartition of this small table into one task.
     *
     * @param payload signature/vector columns carried to both sides
     *   (emitted as `<c>_a` / `<c>_b`)
     */
-  private def boundedCandidates(bucketed: DataFrame, keyCol: String,
-                                bucketCols: Seq[String],
-                                payload: Seq[String],
-                                maxBucket: Int): DataFrame = {
-    val ranked = withBucketRank(bucketed, keyCol, bucketCols)
-    def side(df: DataFrame, tag: String, rn: Option[Column]) =
-      df.select(col(keyCol).as(tag) +:
-        payload.map(c => col(c).as(s"${c}_$tag")) ++:
-        bucketCols.map(col) ++:
-        rn.map(_.as("_rn")).toSeq: _*)
-    val small = ranked.filter(col("_bsz") <= maxBucket)
-    val big = ranked.filter(col("_bsz") > maxBucket)
-    val out = Seq(col("a"), col("b")) ++ payload.flatMap(c =>
-      Seq(col(s"${c}_a"), col(s"${c}_b")))
-    side(small, "a", None).join(side(small, "b", None), bucketCols)
-      .filter(col("a") < col("b"))
-      .select(out: _*)
-      .unionByName(
-        side(big, "a", Some(col("_rn")))
-          .join(side(big, "b", Some(col("_rn") - 1)), bucketCols :+ "_rn")
-          .select(out: _*))
+  private[graft] def boundedCandidates(bucketed: DataFrame, keyCol: String,
+                                       bucketCols: Seq[String],
+                                       payload: Seq[String],
+                                       maxBucket: Int): DataFrame = {
+    val in = bucketed
+      .filter(bucketCols.map(col(_).isNotNull).reduce(_ && _))
+      .select((keyCol +: payload ++: bucketCols).map(col): _*)
+    // a row of the pass is (key, payload..., bucket...); a pair of rows x, y
+    // emits x(i), y(i) for each i < np: a, b, then <c>_a, <c>_b per payload
+    val np = 1 + payload.size
+    val outSchema = StructType(in.schema.fields.take(np).zip("" +: payload.map(_ + "_"))
+      .flatMap { case (f, p) => Seq(f.copy(name = p + "a"), f.copy(name = p + "b")) })
+    val n = bucketed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    in.repartition(n, bucketCols.map(col): _*)
+      .sortWithinPartitions((bucketCols :+ keyCol).map(col): _*)
+      .mapPartitions { rows =>
+        val it = rows.buffered
+        def pair(x: Row, y: Row) = Row.fromSeq((0 until np).flatMap(i => Seq(x.get(i), y.get(i))))
+        def inBucket(first: Row) = it.hasNext &&
+          (np until first.length).forall(i => it.head.get(i) == first.get(i))
+        def bucketPairs(): Iterator[Row] = {
+          val first = it.head
+          val bucket = Iterator.continually(()).takeWhile(_ => inBucket(first)).map(_ => it.next())
+          val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+          while (buf.size <= maxBucket && bucket.hasNext) buf += bucket.next()
+          if (buf.size <= maxBucket)
+            for {
+              i <- buf.indices.iterator
+              j <- (i + 1 until buf.size).iterator
+              if !buf(i).isNullAt(0) && !buf(j).isNullAt(0) && buf(i).get(0) != buf(j).get(0)
+            } yield pair(buf(i), buf(j))
+          else (buf.iterator ++ bucket).sliding(2).withPartial(false).map(w => pair(w(0), w(1)))
+        }
+        Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap(_ => bucketPairs())
+      }(Encoders.row(outSchema))
   }
 
   /** Candidate near-duplicate pairs via banded LSH + exact Jaccard verify.
@@ -157,10 +154,10 @@ object Dedup {
     * Scale shape: signatures come from the native
     * [[graft.expressions.MinHashBands]] codegen expression — one scan-side
     * pass per document, no shingle arrays materialized, no UDF boxing. The
-    * band table is just `(key, band, hash)`, so candidate generation is an
-    * equi-join on dense keys with nothing wide shuffled; verification
-    * re-reads only the *texts* of surviving candidate pairs and computes
-    * exact Jaccard directly ([[graft.expressions.ShingleJaccard]]).
+    * band table is just `(key, band, hash)`, so candidate generation
+    * ([[boundedCandidates]]) shuffles only those narrow rows, once;
+    * verification re-reads only the *texts* of surviving candidate pairs
+    * and computes exact Jaccard directly ([[graft.expressions.ShingleJaccard]]).
     *
     * @param jaccardThreshold verification threshold on exact shingle Jaccard
     * @param maxBucket hot-bucket bound — see [[boundedCandidates]]
@@ -170,10 +167,8 @@ object Dedup {
                    maxBucket: Int = 1024): DataFrame = {
     val spark = docs.sparkSession
     val d = spread(docs)
-    val bands = localCheckpointIfSmall(
-      d.select(col(keyCol),
-        posexplode(TextSignatures.minhashBandsCol(spark)(col("text"), k)).as(Seq("band", "bh"))),
-      docs, CandidateCheckpointMaxBytes)
+    val bands = d.select(col(keyCol),
+      posexplode(TextSignatures.minhashBandsCol(spark)(col("text"), k)).as(Seq("band", "bh")))
     val candidates = boundedCandidates(bands, keyCol, Seq("band", "bh"), Nil, maxBucket)
       .dropDuplicates("a", "b")
     candidates
@@ -363,13 +358,13 @@ object Dedup {
     // shuffle/sort tail instead of queueing a whole job behind it; same
     // again for the two appends below. Measured at sf0.1 (Q114Legs): the
     // serial chain paid bands+texts+append as a straight sum.
-    inParallel(
+    graft.Concurrently(Seq(
       () => minhashBandTable(corpus, keyCol, k).withColumnRenamed(keyCol, "old_id")
         .write.mode("overwrite").format("parquet")
         .bucketBy(nBuckets, "band", "bh").sortBy("band", "bh")
         .saveAsTable(bandsTbl),
       () => corpus.select(col(keyCol).as("old_id"), col("text").as("ta"))
-        .write.mode("overwrite").format("parquet").saveAsTable(textsTbl))
+        .write.mode("overwrite").format("parquet").saveAsTable(textsTbl)))
     // r19: band the increment ONCE per call — the same rows feed the
     // candidate join and the corpus-grows append (it used to be banded
     // twice, once in each). Eager localCheckpoint: increment-sized by the
@@ -383,17 +378,15 @@ object Dedup {
       .localCheckpoint(true)
     // corpus-grows: the increment's banding was paid above, exactly once —
     // the next increment gates against these rows without re-banding them
-    inParallel(
+    graft.Concurrently(Seq(
       () => incBands.withColumnRenamed("new_id", "old_id")
         .write.mode("append").format("parquet")
         .bucketBy(nBuckets, "band", "bh").sortBy("band", "bh")
         .saveAsTable(bandsTbl),
       () => incoming.select(col(keyCol).as("old_id"), col("text").as("ta"))
-        .write.mode("append").format("parquet").saveAsTable(textsTbl))
+        .write.mode("append").format("parquet").saveAsTable(textsTbl)))
     out
   }
-
-  private def inParallel(fs: (() => Unit)*): Unit = Inputs.runConcurrently(fs: _*)
 
   // ------------------------------------------- containment (excerpt dedup)
 
@@ -544,15 +537,13 @@ object Dedup {
     *
     * The Hamming check runs BEFORE the pair dedup: on real text the 16-bit
     * buckets are dense (shared vocabulary pulls signatures together), so the
-    * bucket join emits orders of magnitude more candidates than survivors —
-    * a one-instruction popcount per joined row is far cheaper than shuffling
+    * bucket pass emits orders of magnitude more candidates than survivors —
+    * a one-instruction popcount per candidate is far cheaper than shuffling
     * every candidate pair into `dropDuplicates`.
     */
   def simhashPairs(docs: DataFrame, keyCol: String, textCol: String,
                    maxDist: Int = 3, maxBucket: Int = 4096): DataFrame = {
-    boundedCandidates(
-      localCheckpointIfSmall(simhashChunkTable(docs, keyCol, textCol), docs,
-        CandidateCheckpointMaxBytes),
+    boundedCandidates(simhashChunkTable(docs, keyCol, textCol),
       keyCol, Seq("chunk", "cv"), Seq("simhash"), maxBucket)
       .withColumn("hamming", bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("hamming") <= maxDist)
@@ -625,13 +616,13 @@ object Dedup {
   }
 
   /** Embedding near-dup at corpus scale: sign-projection LSH buckets provide
-    * the blocking — candidate generation is an EQUI-join on the dense bucket
-    * id (hash join, never a cross join) — and cosine ≥ `minSim` verifies
-    * only within-bucket pairs. Each vector lands in exactly one bucket, so
-    * pairs are already unique (no dedup shuffle). Identical vectors always
-    * share a bucket, so exact duplicates have recall 1; near-dup recall is
-    * tuned by `nPlanes` (fewer planes ⇒ bigger buckets ⇒ more recall, more
-    * verify work).
+    * the blocking — candidates are the within-bucket pairs of
+    * [[boundedCandidates]]' one sorted pass, never a cross join — and
+    * cosine ≥ `minSim` verifies only those pairs. Each vector lands in
+    * exactly one bucket, so pairs are already unique (no dedup shuffle).
+    * Identical vectors always share a bucket, so exact duplicates have
+    * recall 1; near-dup recall is tuned by `nPlanes` (fewer planes ⇒ bigger
+    * buckets ⇒ more recall, more verify work).
     */
   def embeddingLshPairs(emb: DataFrame, keyCol: String, vecCol: String,
                         minSim: Double = 0.9, nPlanes: Int = 8,
@@ -645,10 +636,8 @@ object Dedup {
       case None => return emb.select(col(keyCol).as("a"), col(keyCol).as("b"),
         lit(0.0).as("sim")).limit(0)
     }
-    val bucketed = localCheckpointIfSmall(
-      graft.operators.Similarity.withLshBucket(emb, vecCol, nPlanes, dim)
-        .select(col(keyCol), col(vecCol), col("bucket")),
-      emb, CandidateCheckpointMaxBytes)
+    val bucketed = graft.operators.Similarity.withLshBucket(emb, vecCol, nPlanes, dim)
+      .select(col(keyCol), col(vecCol), col("bucket"))
     boundedCandidates(bucketed, keyCol, Seq("bucket"), Seq(vecCol), maxBucket)
       .select(col("a"), col("b"),
         rnd(cos(col(s"${vecCol}_a"), col(s"${vecCol}_b")), 6).as("sim"))
@@ -668,8 +657,8 @@ object Dedup {
     * of the training set plus driver-side Lloyd iterations
     * ([[Similarity.kmeansCentroids]]); the training set is bounded by
     * `trainSampleMod` and by `spark.driver.maxResultSize`. Assignment is
-    * one broadcast join; pairing is an EQUI-join on the dense `cent_id`
-    * key through [[boundedCandidates]], so a degenerate cell (an
+    * one broadcast join; pairing is [[boundedCandidates]]' sorted pass over
+    * rows hash-partitioned on `cent_id`, so a degenerate cell (an
     * identical-vector pile) costs linear chain pairs, never quadratic. At
     * 100 TB, `nlist` scales with the corpus (target cell size stays
     * bounded, e.g. √N cells) — the per-cell pair cost is (N/nlist)²·nlist,
@@ -708,10 +697,8 @@ object Dedup {
     // bit-identical to the inline cosine; see expressions.VecPrimitives)
     val dot = graft.functions.VectorFunctions.dotNative(spark) _
     val nrm = graft.functions.VectorFunctions.normNative(spark)(_)
-    val sided = localCheckpointIfSmall(
-      cells.join(emb.select(col(keyCol).as("_id"), col(vecCol).as("_v"),
-        nrm(col(vecCol)).as("_n")), "_id"),
-      emb, CandidateCheckpointMaxBytes)
+    val sided = cells.join(emb.select(col(keyCol).as("_id"), col(vecCol).as("_v"),
+      nrm(col(vecCol)).as("_n")), "_id")
     boundedCandidates(sided, "_id", Seq("cent_id"), Seq("_v", "_n"), maxCell)
       .select(col("a"), col("b"),
         graft.functions.VectorFunctions.roundNative(spark)(
@@ -785,11 +772,9 @@ object Dedup {
     // and the distributed loop below owns the work — this tier exists so
     // measured-tiny cluster sets (the common case after LSH banding caps)
     // stop paying 5+ scheduling rounds for sub-millisecond math.
-    val driverMaxEdges = spark.conf.getOption("spark.graft.ccDriverEdges")
-      .map(_.toLong).getOrElse(1000000L)
     val keysAreLong = fwd.schema.fields
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (keysAreLong && edgeCount <= driverMaxEdges) {
+    if (keysAreLong && edgeCount <= DriverMaxEdges) {
       import spark.implicits._
       // ONE job: pull the checkpointed edge list (bounded by the measured
       // count). Union-find with path-halving + union by rank, then label
@@ -826,9 +811,23 @@ object Dedup {
         val r = find(i)
         if (keys(i) < minOfRoot(r)) minOfRoot(r) = keys(i)
       }
-      return (0 until n).map(i => (keys(i), minOfRoot(find(i))))
+      (0 until n).map(i => (keys(i), minOfRoot(find(i))))
         .toDF("doc_id", "canonical")
-    }
+    } else labelLoop(edges, edgeCount)
+  }
+
+  /** Edge count up to which [[duplicateClusters]] closes components on the
+    * driver (symmetric edges; the reasoning is at its use).
+    */
+  private val DriverMaxEdges = 1000000L
+
+  /** The distributed tier of [[duplicateClusters]]: min-label propagation
+    * with pointer jumping over the symmetric `(src, dst)` edge list, one
+    * materialized job per round. `edgeCount` (the edge list's measured
+    * size) picks the loop's AQE posture.
+    */
+  private[graft] def labelLoop(edges: DataFrame, edgeCount: Long): DataFrame = {
+    val spark = edges.sparkSession
     // AQE posture, decided by the MEASURED edge volume: every round's plan
     // is join + aggregate + self-join over edge-list-sized data, and under
     // AQE each of those tiny stages materializes as its own Spark job — at

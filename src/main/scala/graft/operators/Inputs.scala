@@ -32,22 +32,4 @@ private[graft] object Inputs {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
-
-  /** Runs independent actions (typically writes of independent artifacts)
-    * concurrently and rethrows the first failure after all complete —
-    * guide §2.6: Spark happily schedules several jobs at once, and a cheap
-    * job back-fills the expensive one's straggler tail instead of queueing
-    * serially behind it. Child threads inherit the caller's job
-    * group/description (SparkContext local properties are inheritable), so
-    * per-query watchdog cancellation still reaches these jobs.
-    */
-  def runConcurrently(fs: (() => Unit)*): Unit = {
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val ts = fs.map { f =>
-      val t = new Thread(() => try f() catch { case e: Throwable => errs.add(e) })
-      t.setDaemon(true); t.start(); t
-    }
-    ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
-  }
 }

@@ -431,12 +431,12 @@ object Similarity {
     // halves' writes carry no data dependency, so they run as concurrent
     // jobs (the cheap centroid write back-fills the bucketed cells write).
     val cent = kmeansCentroids(trainSet, keyCol, vecCol, nlist, kmeansIters)
-    Inputs.runConcurrently(
+    graft.Concurrently(Seq(
       () => cent.write.mode("overwrite").format("parquet").saveAsTable(centTbl),
       () => ivfCellRowsFrom(spark, corpus, keyCol, vecCol, cent)
         .write.mode("overwrite").format("parquet")
         .bucketBy(nBuckets, "cent_id").sortBy("cent_id")
-        .saveAsTable(cellsTbl))
+        .saveAsTable(cellsTbl)))
   }
 
   /** SEARCH: today's increment probes the persisted index — reads only the

@@ -2,7 +2,6 @@ package graft.sources.odata
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
-import java.util.concurrent.{ExecutionException, Executors}
 
 import scala.jdk.CollectionConverters._
 
@@ -200,7 +199,7 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
         (out, typed.schema, descriptions)
       }
     }
-    val written = concurrently(chains).flatten
+    val written = graft.Concurrently(chains).flatten
 
     // Sidecars (A18): Metadata.json always (raw tree — nested fields and
     // nulls preserved); ColDescriptions.json v3 only, from the rows the
@@ -229,20 +228,5 @@ final class StatlineIngest(spark: SparkSession, client: StatlineClient,
       }
     }
     IngestResult(skipped = false, snapshotDir, written.map(_._1))
-  }
-
-  /** Runs `chains` on a pool of one thread per chain and returns their
-    * results in order. The pool threads are created by the calling thread,
-    * so they inherit its SparkContext local properties (job group,
-    * scheduler pool). When chains throw, the rest still run to completion;
-    * then the first failure in order is rethrown as the chain threw it.
-    */
-  private def concurrently[T](chains: Seq[() => T]): Seq[T] = {
-    val pool = Executors.newFixedThreadPool(chains.size.max(1))
-    try {
-      chains.map(c => pool.submit(() => c()))
-        .map(f => try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) })
-        .map(_.fold(e => throw e, identity))
-    } finally pool.shutdown()
   }
 }

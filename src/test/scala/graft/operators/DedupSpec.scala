@@ -34,25 +34,23 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("duplicate clustering: driver union-find tier == distributed loop, gate respects conf") {
-    // Since r16 every unit-scale edge set closes on the driver (Tier 0,
-    // spark.graft.ccDriverEdges default 1M) — without this spec the
-    // distributed pointer-jumping loop would only ever run at >=1M edges,
-    // i.e. never under `sbt test`. Force each tier on its own session
-    // clone and pin the fixpoint equality on a multi-component graph with
+    // Every edge set under 1M edges closes on the driver (Tier 0), so the
+    // distributed pointer-jumping loop never runs through
+    // `duplicateClusters` under `sbt test`. Call the loop directly and pin
+    // the fixpoint equality of both tiers on a multi-component graph with
     // an odd-length chain (exercises >1 loop round).
+    val s = spark
+    import s.implicits._
     val chain = Seq((10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L),
       (20L, 23L), (23L, 21L), (30L, 31L))
-    def runWith(gate: String) = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.graft.ccDriverEdges", gate)
-      import s2.implicits._
-      Dedup.duplicateClusters(chain.toDF("a", "b"))
-        .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val expected = Seq((10L, 10L), (11L, 10L), (12L, 10L), (13L, 10L),
       (14L, 10L), (20L, 20L), (21L, 20L), (23L, 20L), (30L, 30L), (31L, 30L))
-    assert(runWith("1000000") == expected) // driver union-find tier
-    assert(runWith("0") == expected)       // distributed loop forced
+    assert(sorted(Dedup.duplicateClusters(chain.toDF("a", "b"))) == expected) // driver tier
+    val fwd = chain.toDF("src", "dst")
+    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    assert(sorted(Dedup.labelLoop(edges, edges.count())) == expected)       // distributed loop
   }
 
   test("exact dedup groups identical texts and keeps the min key") {
@@ -304,16 +302,17 @@ class DedupSpec extends AnyFunSuite {
     val emb = (corpus :+ (900L, corpus(9)._2)).toDF("vec_id", "embedding")
     val pairs = Dedup.semanticDedupPairs(emb, "vec_id", "embedding", minSim = 0.99)
     val plan = pairs.queryExecution.executedPlan.toString
-    // The PAIRING must be an equi-join on the trained cell id — an
-    // all-pairs corpus fallback would plan a cartesian/nested-loop join of
-    // the corpus against itself. (Centroid ASSIGNMENT is a broadcast
-    // nested-loop by design: corpus × nlist pinned centroid rows, the
-    // bounded q55 shape — so BNLJ is asserted per-occurrence to build on
-    // the local centroid relation, never on a corpus-sized side.)
+    // The PAIRING must be blocked on the trained cell id: rows are
+    // hash-partitioned on `cent_id` and paired within each cell by one
+    // sorted pass — an all-pairs corpus fallback would plan a
+    // cartesian/nested-loop join of the corpus against itself. (Centroid
+    // ASSIGNMENT is a broadcast nested-loop by design: corpus × nlist
+    // pinned centroid rows, the bounded q55 shape — so BNLJ is asserted
+    // per-occurrence to build on the local centroid relation, never on a
+    // corpus-sized side.)
     assert(!plan.contains("CartesianProduct"), s"cartesian in plan:\n$plan")
-    assert(Seq("SortMergeJoin [cent_id", "ShuffledHashJoin [cent_id",
-        "BroadcastHashJoin [cent_id").exists(plan.contains),
-      s"pairing is not an equi-join on cent_id:\n$plan")
+    assert(plan.contains("hashpartitioning(cent_id"),
+      s"pairing is not partitioned on cent_id:\n$plan")
     val bnljBuilds = "BroadcastNestedLoopJoin BuildRight".r
       .findAllMatchIn(plan).size
     val localCentScans = "LocalTableScan \\[cent_id".r.findAllMatchIn(plan).size
@@ -483,5 +482,75 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(inc == full, s"incremental=${inc.toSeq.sorted} full-restricted=${full.toSeq.sorted}")
     assert(inc.nonEmpty, "fixture must exercise at least one cross-slice match")
+  }
+
+  /** The candidate formulation `boundedCandidates` replaced, kept as its
+    * reference: a per-bucket rank window, an in-cap self-join on the
+    * bucket (`a < b`) and an over-cap self-join on `(bucket, rank)`
+    * against `rank − 1`, joined by a union.
+    */
+  private def referenceCandidates(bucketed: org.apache.spark.sql.DataFrame, keyCol: String,
+                                  bucketCols: Seq[String], payload: Seq[String],
+                                  maxBucket: Int): org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(bucketCols.map(col): _*)
+    val ranked = bucketed
+      .withColumn("_rn", row_number().over(w.orderBy(col(keyCol))))
+      .withColumn("_bsz", count(lit(1)).over(w))
+    def side(df: org.apache.spark.sql.DataFrame, tag: String, rn: Option[org.apache.spark.sql.Column]) =
+      df.select(col(keyCol).as(tag) +:
+        payload.map(c => col(c).as(s"${c}_$tag")) ++:
+        bucketCols.map(col) ++:
+        rn.map(_.as("_rn")).toSeq: _*)
+    val small = ranked.filter(col("_bsz") <= maxBucket)
+    val big = ranked.filter(col("_bsz") > maxBucket)
+    val out = Seq(col("a"), col("b")) ++ payload.flatMap(c =>
+      Seq(col(s"${c}_a"), col(s"${c}_b")))
+    side(small, "a", None).join(side(small, "b", None), bucketCols)
+      .filter(col("a") < col("b"))
+      .select(out: _*)
+      .unionByName(
+        side(big, "a", Some(col("_rn")))
+          .join(side(big, "b", Some(col("_rn") - 1)), bucketCols :+ "_rn")
+          .select(out: _*))
+  }
+
+  test("bounded candidates: the sorted pass equals the rank-window/self-join formulation") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(13)
+    for (cap <- Seq(1, 2, 8, 100)) {
+      val sizes = Seq(1, 2, cap - 1, cap, cap + 1, 2 * cap + 3, 40).filter(_ > 0).distinct
+      // keys unique per bucket and interleaved across buckets; the first
+      // row of the size-2 bucket and of the size-(cap+1) bucket (always
+      // over the cap) has a null key: nulls sort first, so a chain pairs
+      // it with the bucket's smallest key, and an in-cap bucket drops it
+      val keys = rnd.shuffle((0L until sizes.sum.toLong).toList)
+      val bounds = sizes.scanLeft(0)(_ + _)
+      val nullKeyIn = Set(sizes.indexOf(2), sizes.indexOf(cap + 1))
+      val rows = sizes.indices.flatMap { bi =>
+        keys.slice(bounds(bi), bounds(bi + 1)).zipWithIndex.map { case (k, i) =>
+          (if (i == 0 && nullKeyIn(bi)) None else Some(k), Option(bi), Option(bi * 31L))
+        }
+      } ++ Seq(
+        (Some(900L), None, Some(0L)), // a null bucket value pairs with nothing
+        (Some(901L), Some(0), None),
+        (Some(902L), None, None))
+      val bucketed = rows.toDF("k", "b1", "b2")
+        .withColumn("vec", array(col("k").cast("float"), (col("k") * 0.5).cast("float")))
+        .withColumn("n", col("k") * 7)
+        .repartition(3)
+      for (payload <- Seq(Nil, Seq("vec", "n"))) {
+        def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+          .map(_.toSeq.map { case v: scala.collection.Seq[_] => v.toList; case v => v })
+          .groupBy(identity).view.mapValues(_.size).toMap
+        val got = Dedup.boundedCandidates(bucketed, "k", Seq("b1", "b2"), payload, cap)
+        val want = referenceCandidates(bucketed, "k", Seq("b1", "b2"), payload, cap)
+        assert(got.columns.toSeq == want.columns.toSeq)
+        val (g, w) = (rowsOf(got), rowsOf(want))
+        assert(w.values.sum > 0)
+        assert(g.equals(w), s"cap $cap, payload $payload: only in pass ${g.toSet -- w.toSet}; " +
+          s"only in reference ${w.toSet -- g.toSet}")
+      }
+    }
   }
 }

@@ -68,7 +68,7 @@ class ZOrderSpec extends AnyFunSuite {
         cols.map { c =>
           val cc = b.getColumns.asScala.find(_.getPath.toDotString == c)
             .getOrElse(sys.error(s"column $c missing from footer of $f"))
-          val st = cc.getStatistics
+          val st: org.apache.parquet.column.statistics.Statistics[_] = cc.getStatistics
           c -> (st.genericGetMin.toString.toLong, st.genericGetMax.toString.toLong)
         }.toMap
       } finally r.close()
