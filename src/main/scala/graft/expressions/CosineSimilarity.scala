@@ -91,9 +91,9 @@ object CosineSimilarity {
 
   /** The cosine fold: Σxy / (√Σx² · √Σy²), accumulated in element order over
     * the common prefix, float elements widened to double. The interpreted
-    * path and the driver-side k-means trainer
-    * ([[graft.operators.Similarity.kmeansCentroids]]) both call this;
-    * `doGenCode` emits the same loop.
+    * path and the nearest-centroid rule ([[graft.operators.Similarity.nearest]],
+    * which the k-means trainer and the IVF cell and probe columns share)
+    * both call this; `doGenCode` emits the same loop.
     */
   def fold(x: ArrayData, xDouble: Boolean, y: ArrayData, yDouble: Boolean): Double = {
     val n = math.min(x.numElements(), y.numElements())

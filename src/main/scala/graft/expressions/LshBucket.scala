@@ -123,8 +123,8 @@ object LshBucket {
   val name = "graft_lsh_bucket"
 
   /** Fixed random hyperplanes: nPlanes × dim, seed-deterministic (the
-    * canonical generator — [[graft.operators.Similarity.hyperplanes]]
-    * delegates here).
+    * one generator; [[graft.operators.Similarity.withLshBucketComposed]]
+    * takes its planes from here).
     */
   def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Array[Array[Double]] = {
     val rnd = new java.util.Random(seed)

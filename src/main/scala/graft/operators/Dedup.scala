@@ -657,7 +657,8 @@ object Dedup {
     * of the training set plus driver-side Lloyd iterations
     * ([[Similarity.kmeansCentroids]]); the training set is bounded by
     * `trainSampleMod` and by `spark.driver.maxResultSize`. Assignment is
-    * one broadcast join; pairing is [[boundedCandidates]]' sorted pass over
+    * one projection ([[Similarity.nearestCells]] against the broadcast
+    * centroid array); pairing is [[boundedCandidates]]' sorted pass over
     * rows hash-partitioned on `cent_id`, so a degenerate cell (an
     * identical-vector pile) costs linear chain pairs, never quadratic. At
     * 100 TB, `nlist` scales with the corpus (target cell size stays
@@ -689,16 +690,17 @@ object Dedup {
     val trainSet =
       if (trainSampleMod <= 1) emb
       else emb.filter(Curation.portableHash(col(keyCol)) % trainSampleMod === 0)
-    val cent = Similarity.kmeansCentroids(trainSet, keyCol, vecCol, nlist, kmeansIters)
-    val cells = Similarity.nearestCells(
-      spread(emb.select(col(keyCol).as("_id"), col(vecCol).as("_v"))), "_id", "_v", cent, 1)
-    // each side carries its vector's norm, computed once per VECTOR before
-    // pairing — the per-pair verify then runs norm-factored (dot/(na·nb),
-    // bit-identical to the inline cosine; see expressions.VecPrimitives)
+    val cent = Similarity.centroidArray(
+      Similarity.kmeansCentroids(trainSet, keyCol, vecCol, nlist, kmeansIters))
+    // each row carries its cell and its vector's norm, computed once per
+    // VECTOR before pairing — the per-pair verify then runs norm-factored
+    // (dot/(na·nb), bit-identical to the inline cosine; see
+    // expressions.VecPrimitives)
     val dot = graft.functions.VectorFunctions.dotNative(spark) _
     val nrm = graft.functions.VectorFunctions.normNative(spark)(_)
-    val sided = cells.join(emb.select(col(keyCol).as("_id"), col(vecCol).as("_v"),
-      nrm(col(vecCol)).as("_n")), "_id")
+    val sided = spread(emb.select(col(keyCol).as("_id"), col(vecCol).as("_v")))
+      .select(col("_id"), col("_v"), nrm(col("_v")).as("_n"),
+        Similarity.nearestCells(spark, col("_v"), cent, 1).getItem(0).as("cent_id"))
     boundedCandidates(sided, "_id", Seq("cent_id"), Seq("_v", "_n"), maxCell)
       .select(col("a"), col("b"),
         graft.functions.VectorFunctions.roundNative(spark)(

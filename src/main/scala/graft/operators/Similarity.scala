@@ -12,19 +12,25 @@ import graft.functions.VectorFunctions
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Two tiers, per SURVEY §2.C:
+  * Four tiers, per SURVEY §2.C:
   *
   *  - '''Brute force''' (the correctness baseline): broadcast the (small)
   *    query set against the corpus — one scan of the corpus, no corpus
   *    shuffle, per-partition local work, then a global top-k. Ranking uses
   *    the 6-decimal-rounded similarity with the neighbor id as tiebreak so
   *    results are reproducible across engines and partitionings.
+  *  - '''Scalar-quantized''' ([[quantizedTopK]]): the brute-force shape
+  *    over int8 codes, exact integer arithmetic end to end.
   *  - '''LSH-bucketed''' (the scale path): sign-random-projection buckets —
   *    each vector hashes to a bucket id from the signs of `nPlanes` fixed
   *    random hyperplane projections; candidate neighbors come from an
   *    equi-join on the bucket id (a plain shuffle/broadcast hash join), so
   *    the 100 TB cost is one join on a dense int key instead of a cross
   *    join. Recall is tuned by `nPlanes` (fewer planes ⇒ bigger buckets).
+  *  - '''IVF''' ([[ivfTopK]]; persisted as [[buildIvfIndex]] and
+  *    [[searchIvfIndex]]): trained k-means cells. A vector's cell and a
+  *    query's probe list both come from one rule, [[nearest]], evaluated
+  *    per row against the broadcast centroid array.
   *
   * Hyperplanes are generated from a fixed seed (java.util.Random is
   * specified deterministically), so bucket assignment is reproducible.
@@ -74,8 +80,6 @@ object Similarity {
     */
   def quantizedTopK(queries: DataFrame, corpus: DataFrame, keyCol: String,
                     vecCol: String, k: Int): DataFrame = {
-    // dim from data: 1-row probe, the lshTopK precedent
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     // left-fold the squared coordinates (array order, not partition order —
     // deterministic and exactly replayed by the oracle's list_reduce); the
     // RAW norm gets its own projection (one fold per row) and the zero
@@ -83,11 +87,12 @@ object Similarity {
     def rawNorm(vc: String): Column = expr(
       s"""sqrt(aggregate($vc, 0.0D,
             (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))""")
+    // each vector codes its own elements, as the oracle's
+    // range(1, len(embedding) + 1) does, so no corpus width is probed
     def codes(vc: String): Column = expr(
-      s"""transform(sequence(1, $dim), i ->
-            CAST(floor(least(greatest(
-                   CAST(element_at($vc, i) AS DOUBLE) / _nm,
-                   -1.0D), 1.0D) * 127.0D + 0.5D) AS BIGINT))""")
+      s"""transform($vc, x ->
+            CAST(floor(least(greatest(CAST(x AS DOUBLE) / _nm, -1.0D), 1.0D)
+                 * 127.0D + 0.5D) AS BIGINT))""")
     def side(df: DataFrame, id: String, vc: String, out: String) = df
       .select(col(id), col(vc), rawNorm(vc).as("_rawnm"))
       .select(col(id), col(vc),
@@ -123,10 +128,6 @@ object Similarity {
       .select(col(groupCol), (col("_pos") + 1).cast("int").as("rnk"),
         col("_t.id").as(idCol), col("_t.score").as(scoreCol))
   }
-
-  /** Fixed random hyperplanes: nPlanes × dim, seed-deterministic. */
-  def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Array[Array[Double]] =
-    graft.expressions.LshBucket.hyperplanes(nPlanes, dim, seed)
 
   /** Adds `bucket` via the native [[graft.expressions.LshBucket]] codegen
     * expression: one fused primitive loop per row, inlined into whole-stage
@@ -190,10 +191,9 @@ object Similarity {
     *  - seed centroids = the `nlist` corpus vectors of lowest portable-hash
     *    rank ([[Curation.portableHash]], key tiebreak) — distribution-free
     *    over any id space, cent_id = rank;
-    *  - each iteration assigns every vector to its nearest centroid by the
-    *    6-decimal-rounded cosine (cent_id tiebreak; NaN ranks above every
-    *    number, as Spark's sort orders it), then recomputes per-cell
-    *    element-wise means, ALSO rounded to 6 decimals;
+    *  - each iteration assigns every vector to its nearest centroid by
+    *    [[nearest]] (the 6-decimal-rounded cosine, cent_id tiebreak), then
+    *    recomputes per-cell element-wise means, ALSO rounded to 6 decimals;
     *  - a cell that loses all members keeps its previous centroid.
     *
     * The rounding is what makes refinement reproducible: raw double means
@@ -232,17 +232,7 @@ object Similarity {
       val len = new Array[Int](cent.length)
       vecs.foreach { v =>
         if (v != null) {
-          // highest score wins, ties to the lower cent_id; a null centroid
-          // scores null, which ranks below every number
-          var best = -1
-          var bestS = 0.0
-          cent.indices.foreach { c =>
-            if (cent(c) != null) {
-              val s = FastRound.round(CosineSimilarity.fold(v, true, cent(c), true), 6)
-              if (best < 0 || cent(best) == null ||
-                  SQLOrderingUtil.compareDoubles(s, bestS) > 0) { best = c; bestS = s }
-            } else if (best < 0) best = c
-          }
+          val best = nearest(v, cent, 1)(0)
           val n = v.numElements()
           (0 until n).foreach { p => sums(best)(p) += v.getDouble(p); counts(best)(p) += 1 }
           len(best) = math.max(len(best), n)
@@ -259,74 +249,99 @@ object Similarity {
       .toDF("cent_id", "cvec")
   }
 
-  /** Every row of `df` scored against every centroid of `cent`: a
-    * broadcast join and the round-6 `graft_cosine` of `vecCol` against
-    * `cvec`, the rule [[kmeansCentroids]] assigns by. Returns `keep`,
-    * `cent_id` and the score `s`; each caller reduces it its own way.
+  /** The nearest-centroid rule: the indices of the `n` best of `cents`
+    * for `v`, best first. A centroid scores the round-6 cosine
+    * ([[CosineSimilarity.fold]] through [[FastRound.round]]); the higher
+    * score wins by `compareDoubles`, so NaN (a zero-norm vector or
+    * centroid) ranks above every number; a null centroid ranks below every
+    * number; ties go to the lower index. That is the order of the oracles'
+    * `ROW_NUMBER() OVER (ORDER BY s DESC, cent_id)`. [[kmeansCentroids]]
+    * assigns by it with n = 1, and [[nearestCells]] evaluates it per row.
     */
-  private def centroidScores(df: DataFrame, vecCol: String, cent: DataFrame,
-                             keep: Column*): DataFrame = {
-    val spark = df.sparkSession
-    val cos = VectorFunctions.cosineNative(spark) _
-    val rnd = VectorFunctions.roundNative(spark) _
-    df.join(broadcast(cent))
-      .select(keep :+ col("cent_id") :+ rnd(cos(col(vecCol), col("cvec")), 6).as("s"): _*)
+  private[graft] def nearest(v: ArrayData, cents: Array[ArrayData], n: Int): Array[Int] = {
+    val s = cents.map(c =>
+      if (c == null) 0.0 else FastRound.round(CosineSimilarity.fold(v, true, c, true), 6))
+    def better(a: Int, b: Int) =
+      cents(a) != null && (cents(b) == null || SQLOrderingUtil.compareDoubles(s(a), s(b)) > 0)
+    // a stable sort: equals keep the lower index first
+    cents.indices.sortWith(better).take(n).toArray
   }
 
-  /** The `n` nearest cells of each `(idCol, vecCol)` row: `(idCol, cent_id)`
-    * through the bounded-heap aggregate, tie order (s desc, cent_id asc) as
-    * a rank window would give. n = 1 assigns a vector to its cell; n =
-    * nprobe is a query's probe list.
+  /** The centroids of a `(cent_id, cvec)` frame as the array [[nearest]]
+    * indexes: `cent_id` must be the row's position once sorted.
     */
-  private[operators] def nearestCells(df: DataFrame, idCol: String, vecCol: String,
-                                      cent: DataFrame, n: Int): DataFrame =
-    topKPerGroup(centroidScores(df, vecCol, cent, col(idCol)), idCol, "s", "cent_id", n)
-      .select(col(idCol), col("cent_id"))
+  private[graft] def centroidArray(cent: DataFrame): Array[ArrayData] = {
+    val rows = cent.select(col("cent_id").cast("long"), col("cvec").cast("array<double>"))
+      .collect().sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+    rows.zipWithIndex.map[ArrayData] { case (r, i) =>
+      require(!r.isNullAt(0) && r.getLong(0) == i,
+        s"centroid ids must run 0 until ${rows.length}; position $i holds ${r.get(0)}")
+      Option(r.getSeq[Double](1)).map(v => UnsafeArrayData.fromPrimitiveArray(v.toArray)).orNull
+    }
+  }
 
-  /** Each query's `nprobe` nearest cells, `(q_id, cent_id)`: the probe
-    * list [[ivfTopK]], [[searchIvfIndex]] and [[searchCandidateCount]]
-    * expand against the cells.
+  /** The `n` nearest centroids of each row's `vec`, best first, as an
+    * `array<bigint>` of `cent_id`s ([[nearest]]); null for a null vector.
+    * `getItem(0)` is a vector's cell, `explode` a query's probe list. The
+    * centroid array ships once per executor as a broadcast.
     */
-  private def probeList(queries: DataFrame, keyCol: String, vecCol: String,
-                        cent: DataFrame, nprobe: Int): DataFrame =
-    nearestCells(queries.select(col(keyCol).as("q_id"), col(vecCol)), "q_id", vecCol,
-      cent, nprobe)
+  private[graft] def nearestCells(spark: SparkSession, vec: Column,
+                                  cents: Array[ArrayData], n: Int): Column = {
+    val bc = spark.sparkContext.broadcast(cents)
+    udf((v: Array[Double]) =>
+      if (v == null) null
+      else nearest(UnsafeArrayData.fromPrimitiveArray(v), bc.value, n).map(_.toLong))
+      .apply(vec.cast("array<double>"))
+  }
 
   /** IVF-flat ANN: the corpus is partitioned into `nlist` cells by nearest
     * centroid; a query scores only vectors in its `nprobe` nearest cells.
     *
     * Centroids come from [[kmeansCentroids]] (seeded on the lowest
-    * portable-hash-rank vectors, `kmeansIters` Lloyd refinements). The *query shape* is the
-    * point: cell assignment is one broadcast-join + per-key argmax, the
-    * probe is an equi-join on the dense `cent_id` key, and the corpus never
-    * cross-joins the query set. All ranking happens on 6-decimal-rounded
-    * scores with id tiebreaks, so the whole pipeline is reproducible (and
-    * DuckDB-oracled, unusually for an ANN index).
+    * portable-hash-rank vectors, `kmeansIters` Lloyd refinements). The
+    * *query shape* is the point: a corpus vector's cell and a query's
+    * probe list are one projection each ([[nearestCells]]), the probe is an
+    * equi-join on the dense `cent_id` key, and the corpus never cross-joins
+    * the query set. All ranking happens on 6-decimal-rounded scores with id
+    * tiebreaks, so the whole pipeline is reproducible (and DuckDB-oracled,
+    * unusually for an ANN index).
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, keyCol: String,
               vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
               kmeansIters: Int = 2): DataFrame = {
-    val cos = VectorFunctions.cosineNative(corpus.sparkSession) _
-    val rnd = VectorFunctions.roundNative(corpus.sparkSession) _
-    val cent = kmeansCentroids(corpus, keyCol, vecCol, nlist, kmeansIters)
+    val spark = corpus.sparkSession
+    val cent = centroidArray(kmeansCentroids(corpus, keyCol, vecCol, nlist, kmeansIters))
     // The inverted lists (corpus→cell map) are the OTHER half of the IVF
     // index, built here for this one search. A caller that searches one
     // corpus again and again builds both halves once with [[buildIvfIndex]]
-    // and probes them with [[searchIvfIndex]].
-    val cells = nearestCells(corpus.select(col(keyCol).as("c_id"), col(vecCol)),
-      "c_id", vecCol, cent, 1)
-    val probes = probeList(queries, keyCol, vecCol, cent, nprobe)
-    val candidates = probes.join(cells, "cent_id")
+    // and probes them with [[searchIvfIndex]]. Query vectors come from the
+    // QUERIES input — they need not exist in the corpus (and a colliding
+    // corpus id must not shadow them).
+    val candidates = probeRows(spark, queries, keyCol, vecCol, cent, nprobe)
+      .join(ivfCellRows(spark, corpus, keyCol, vecCol, cent), "cent_id")
       .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id").as("n_id"))
-    // query vectors come from the QUERIES input — they need not exist in the
-    // corpus (and a colliding corpus id must not shadow them)
-    val scored = candidates
-      .join(queries.select(col(keyCol).as("q_id"), col(vecCol).as("qv")), "q_id")
-      .join(corpus.select(col(keyCol).as("n_id"), col(vecCol).as("nv")), "n_id")
-      .select(col("q_id"), col("n_id"), rnd(cos(col("qv"), col("nv")), 6).as("sim"))
-    topKPerGroup(scored, "q_id", "sim", "n_id", k)
+    topKPerGroup(scoreCandidates(spark, candidates), "q_id", "sim", "n_id", k)
   }
+
+  /** Each query's probe list as rows `(q_id, qv, qn, cent_id)`, one per
+    * probed cell: one projection of the queries, carrying the vector and
+    * its norm, so nothing wider than the probe list ever shuffles.
+    */
+  private def probeRows(spark: SparkSession, queries: DataFrame, keyCol: String,
+                        vecCol: String, cent: Array[ArrayData], nprobe: Int): DataFrame =
+    queries.select(col(keyCol).as("q_id"), col(vecCol).as("qv"),
+      VectorFunctions.normNative(spark)(col(vecCol)).as("qn"),
+      explode(nearestCells(spark, col(vecCol), cent, nprobe)).as("cent_id"))
+
+  /** `(q_id, n_id, sim)` for probe rows joined to cell rows: the round-6
+    * cosine, norm-factored as `dot/(qn·nn)` — bit-identical to the inline
+    * `graft_cosine` (see [[graft.expressions.VecPrimitives]]).
+    */
+  private def scoreCandidates(spark: SparkSession, candidates: DataFrame): DataFrame =
+    candidates.select(col("q_id"), col("c_id").as("n_id"),
+      VectorFunctions.roundNative(spark)(
+        VectorFunctions.dotNative(spark)(col("qv"), col("nv")) / (col("qn") * col("nn")), 6)
+        .as("sim"))
 
   def ivfArtifactNames(tag: String): (String, String) =
     (s"graft_ivf_cent_x$tag", s"graft_ivf_cells_x$tag")
@@ -366,41 +381,21 @@ object Similarity {
     out
   }
 
-  /** Cell rows for `df` against the persisted centroids: `(c_id, cent_id,
-    * nv, nn)` — each vector with its nearest cell and its L2 norm, computed
-    * ONCE when the vector enters the index (the search's per-pair cosine
-    * then runs norm-factored `dot/(qn·nn)` — bit-identical to the inline
-    * form, see [[graft.expressions.VecPrimitives]]).
+  /** Cell rows for `df`: `(c_id, cent_id, nv, nn)` — each vector with its
+    * nearest cell and its L2 norm, computed ONCE when the vector enters the
+    * index (the search's per-pair cosine then runs norm-factored
+    * `dot/(qn·nn)` — bit-identical to the inline form, see
+    * [[graft.expressions.VecPrimitives]]). One projection, no exchange.
     */
   private def ivfCellRows(spark: SparkSession, df: DataFrame, keyCol: String,
-                          vecCol: String, centTbl: String): DataFrame =
-    ivfCellRowsFrom(spark, df, keyCol, vecCol, spark.table(centTbl))
+                          vecCol: String, cent: Array[ArrayData]): DataFrame =
+    df.select(col(keyCol).as("c_id"),
+      nearestCells(spark, col(vecCol), cent, 1).getItem(0).as("cent_id"),
+      col(vecCol).as("nv"), VectorFunctions.normNative(spark)(col(vecCol)).as("nn"))
 
-  /** [[ivfCellRows]] against a caller-supplied centroid frame — lets the
-    * index BUILD assign cells straight off the (pinned, nlist-row) trained
-    * centroids instead of reading back the just-written centroid table,
-    * which also removes the write→read dependency between the two index
-    * halves so their writes can overlap (guide §2.6).
-    */
-  private[graft] def ivfCellRowsFrom(spark: SparkSession, df: DataFrame, keyCol: String,
-                                     vecCol: String, cent: DataFrame): DataFrame = {
-    val nrm = VectorFunctions.normNative(spark)(_)
-    // r20 (guide §2.4): the k=1 nearest-cell argmax is ONE declarative
-    // aggregation — `max_by` over the `(s, -cent_id)` struct is exactly
-    // TopKByScore's total order (higher score wins, ties to the smaller
-    // cent_id) — with the vector and its norm riding the map-side partial
-    // agg (the broadcast expansion's 16 rows/key collapse back to one
-    // BEFORE the exchange, so the shuffled bytes match the old join-back's
-    // df side). The old shape paid heap-topK + a join BACK to df: one more
-    // exchange and a second scan of df per build/append.
-    centroidScores(
-        df.select(col(keyCol).as("c_id"), col(vecCol).as("nv"), nrm(col(vecCol)).as("nn")),
-        "nv", cent, col("c_id"), col("nv"), col("nn"))
-      .groupBy("c_id")
-      .agg(max_by(col("cent_id"), struct(col("s"), (-col("cent_id")).as("_t"))).as("cent_id"),
-        first(col("nv")).as("nv"), first(col("nn")).as("nn"))
-      .select(col("c_id"), col("cent_id"), col("nv"), col("nn"))
-  }
+  /** The persisted centroids of index `tag`, read from disk. */
+  private def ivfCentroids(spark: SparkSession, tag: String): Array[ArrayData] =
+    centroidArray(spark.table(ivfArtifactNames(tag)._1))
 
   /** BUILD: train centroids on (a deterministic sample of) the corpus and
     * persist both index halves — paid once per corpus, then amortized over
@@ -425,19 +420,25 @@ object Similarity {
     val trainSet =
       if (trainSampleMod <= 1) corpus
       else corpus.filter(Curation.portableHash(col(keyCol)) % trainSampleMod === 0)
-    // r19 (guide §2.6): the trained centroid frame is a local dataset
-    // (nlist rows), so the cell assignment can run straight off it
-    // — no read-back of the just-written centroid table, and the two index
-    // halves' writes carry no data dependency, so they run as concurrent
-    // jobs (the cheap centroid write back-fills the bucketed cells write).
+    // the cells are assigned off the trained (local, nlist-row) centroids,
+    // not a read-back of the centroid table, so the two index halves'
+    // writes carry no data dependency and run as concurrent jobs
     val cent = kmeansCentroids(trainSet, keyCol, vecCol, nlist, kmeansIters)
     graft.Concurrently(Seq(
       () => cent.write.mode("overwrite").format("parquet").saveAsTable(centTbl),
-      () => ivfCellRowsFrom(spark, corpus, keyCol, vecCol, cent)
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(nBuckets, "cent_id").sortBy("cent_id")
-        .saveAsTable(cellsTbl)))
+      () => writeCells(ivfCellRows(spark, corpus, keyCol, vecCol, centroidArray(cent)),
+        "overwrite", nBuckets, cellsTbl)))
   }
+
+  /** The bucketed cells write. Each cell is gathered into one task first:
+    * a plain projection would write one file per (scan task, bucket).
+    */
+  private def writeCells(cells: DataFrame, mode: String, nBuckets: Int,
+                         cellsTbl: String): Unit =
+    cells.repartition(col("cent_id"))
+      .write.mode(mode).format("parquet")
+      .bucketBy(nBuckets, "cent_id").sortBy("cent_id")
+      .saveAsTable(cellsTbl)
 
   /** SEARCH: today's increment probes the persisted index — reads only the
     * bucketed cells and the broadcast centroid table, never the corpus.
@@ -445,38 +446,27 @@ object Similarity {
   def searchIvfIndex(spark: SparkSession, queries: DataFrame, keyCol: String,
                      vecCol: String, tag: String, k: Int = 3,
                      nprobe: Int = 4): DataFrame = {
-    val (centTbl, cellsTbl) = ivfArtifactNames(tag)
-    val dot = VectorFunctions.dotNative(spark) _
-    val nrm = VectorFunctions.normNative(spark)(_)
-    val rnd = VectorFunctions.roundNative(spark) _
-    val probes = probeList(queries, keyCol, vecCol, spark.table(centTbl), nprobe)
-    // JOIN ORDER: attach each probe's query vector to the
-    // (increment × nprobe)-row probe list BEFORE expanding against the
-    // cells — joining the expanded (probe × cell-member) frame with the
-    // query vectors instead would rely on the planner broadcasting the
-    // query side (and shuffle/sort candidate-count rows carrying vectors
-    // when it doesn't); this way the expansion and the scoring run fused
-    // in the bucketed-read stage regardless of broadcast thresholds, and
-    // nothing wider than the probe list ever shuffles.
-    val probesWithVec = probes
-      .join(queries.select(col(keyCol).as("q_id"), col(vecCol).as("qv"),
-        nrm(col(vecCol)).as("qn")), "q_id")
-    // the index is the bucketed base table plus any streaming-append
-    // segments (q137's LSM tail — see [[appendIvfSegment]]); each source
-    // is scored separately so the base keeps its bucketed cent_id join
-    // while the (small) segment read joins plain, and only the narrow
-    // (q_id, n_id, sim) streams union before the top-k heap
-    val segs = listIvfSegments(spark, tag)
-    val cellSources = spark.table(cellsTbl) +:
-      (if (segs.isEmpty) Nil
-       else Seq(spark.read.parquet(segs: _*)))
-    val scored = cellSources.map { cells =>
-      probesWithVec.join(cells, "cent_id")
-        .filter(col("q_id") =!= col("c_id"))
-        .select(col("q_id"), col("c_id").as("n_id"),
-          rnd(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("sim"))
-    }.reduce(_ unionByName _)
+    val scored = ivfCandidates(spark, queries, keyCol, vecCol, tag, nprobe)
+      .map(scoreCandidates(spark, _)).reduce(_ unionByName _)
     topKPerGroup(scored, "q_id", "sim", "n_id", k)
+  }
+
+  /** What a search of index `tag` scores: the [[probeRows]] expanded
+    * against every cell source — one frame per source, self-matches
+    * dropped; the expansion and scoring run fused in the bucketed-read
+    * stage. The index is the bucketed base table plus any streaming-append
+    * segments (q137's LSM tail — see [[appendIvfSegment]]); each source is
+    * joined separately so the base keeps its bucketed `cent_id` join while
+    * the (small) segment read joins plain. [[searchIvfIndex]] scores these
+    * frames and [[searchCandidateCount]] counts them.
+    */
+  private def ivfCandidates(spark: SparkSession, queries: DataFrame, keyCol: String,
+                            vecCol: String, tag: String, nprobe: Int): Seq[DataFrame] = {
+    val probes = probeRows(spark, queries, keyCol, vecCol, ivfCentroids(spark, tag), nprobe)
+    val segs = listIvfSegments(spark, tag)
+    val cellSources = spark.table(ivfArtifactNames(tag)._2) +:
+      (if (segs.isEmpty) Nil else Seq(spark.read.parquet(segs: _*)))
+    cellSources.map(probes.join(_, "cent_id").filter(col("q_id") =!= col("c_id")))
   }
 
   /** Root of the per-microbatch segment directories for `tag` — a stable
@@ -506,25 +496,21 @@ object Similarity {
   def appendIvfSegment(spark: SparkSession, increment: DataFrame,
                        keyCol: String, vecCol: String, tag: String,
                        batchId: Long): Unit = {
-    val (centTbl, _) = ivfArtifactNames(tag)
-    ivfCellRows(spark, increment, keyCol, vecCol, centTbl)
+    ivfCellRows(spark, increment, keyCol, vecCol, ivfCentroids(spark, tag))
       .write.mode("overwrite")
       .parquet(ivfSegmentBase(spark, tag).resolve(s"b$batchId").toString)
   }
 
   /** Diagnostic: the candidate volume a [[searchIvfIndex]] at these
-    * parameters scores — the probe list expanded against the cells, before
-    * top-k. What the `f443513:SCALE_IVF.json` sweep records next to wall time.
+    * parameters scores — the probe list expanded against the base cells
+    * and the streaming segments, before top-k. What the
+    * `f443513:SCALE_IVF.json` sweep records next to wall time.
     */
   def searchCandidateCount(spark: SparkSession, queries: DataFrame,
                            keyCol: String, vecCol: String, tag: String,
-                           nprobe: Int = 4): Long = {
-    val (centTbl, cellsTbl) = ivfArtifactNames(tag)
-    probeList(queries, keyCol, vecCol, spark.table(centTbl), nprobe)
-      .join(spark.table(cellsTbl).select("cent_id", "c_id"), "cent_id")
-      .filter(col("q_id") =!= col("c_id"))
-      .count()
-  }
+                           nprobe: Int = 4): Long =
+    ivfCandidates(spark, queries, keyCol, vecCol, tag, nprobe)
+      .map(_.select("q_id", "c_id")).reduce(_ unionByName _).count()
 
   /** APPEND (corpus-grows): the increment's cell assignments enter the
     * bucketed cells table, so the next increment probes a corpus that
@@ -534,13 +520,9 @@ object Similarity {
     */
   def appendToIvfIndex(spark: SparkSession, increment: DataFrame,
                        keyCol: String, vecCol: String, tag: String,
-                       nBuckets: Int = 32): Unit = {
-    val (centTbl, cellsTbl) = ivfArtifactNames(tag)
-    ivfCellRows(spark, increment, keyCol, vecCol, centTbl)
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "cent_id").sortBy("cent_id")
-      .saveAsTable(cellsTbl)
-  }
+                       nBuckets: Int = 32): Unit =
+    writeCells(ivfCellRows(spark, increment, keyCol, vecCol, ivfCentroids(spark, tag)),
+      "append", nBuckets, ivfArtifactNames(tag)._2)
 
   // ------------------------------------------------------- declared queries
 

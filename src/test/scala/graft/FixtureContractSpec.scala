@@ -17,9 +17,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    user. Contract: events carries no null ts/event_id.
   *  - [[graft.expressions.TopKByScore]] skips NaN scores; a zero-norm
   *    vector makes cosine NaN, which DuckDB's ROW_NUMBER would order
-  *    deterministically instead of dropping. Contract: embeddings contains
-  *    no zero-norm (or null) vector, so the NaN path is unreachable in the
-  *    oracled similarity queries.
+  *    deterministically instead of dropping. The top-k rankings of
+  *    neighbors go through that heap. (The nearest-centroid rule,
+  *    `Similarity.nearest`, ranks NaN above every number as ROW_NUMBER
+  *    does; `NearestCentroidSpec` pins it.) A null vector has no cell,
+  *    where the oracles' ROW_NUMBER would file it in cell 0. Contract:
+  *    embeddings contains no zero-norm (or null) vector, so neither path is
+  *    reachable in the oracled similarity queries.
   */
 class FixtureContractSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

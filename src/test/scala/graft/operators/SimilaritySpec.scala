@@ -50,10 +50,18 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 2.0 / 3.0, s"quantized recall vs exact collapsed: $recall")
   }
 
+  test("quantized ANN over an empty corpus returns an empty result") {
+    val s = spark
+    import s.implicits._
+    val queries = Seq((10L, Array(1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
+    val out = Similarity.quantizedTopK(queries, queries.limit(0), "vec_id", "embedding", k = 3)
+    assert(out.collect().isEmpty)
+  }
+
   test("LSH buckets put identical vectors together; topk structure is sane") {
     val t = graft.Tables(spark, graft.TestSpark.Sf0001)
     val emb = t.embeddings
-    val planes = Similarity.hyperplanes(8, 64)
+    val planes = graft.expressions.LshBucket.hyperplanes(8, 64)
     val b = Similarity.withLshBucket(emb, "embedding", 8, 64)
     // native codegen expression ≡ the composed zip_with/aggregate form
     val b2 = Similarity.withLshBucketComposed(emb, "embedding", planes)
@@ -193,6 +201,20 @@ class SimilaritySpec extends AnyFunSuite {
     assert(spark.table(cellsTbl).count() == emb.count())
     assert(spark.table(cellsTbl).select("c_id").distinct().count() == emb.count())
     assert(spark.table(centTbl).count() == 16)
+
+    // the bucketed write gathers each cell into one task first: at most one
+    // part file per non-empty cell, however many partitions the corpus spans
+    val partsTag = tag + "parts"
+    val multi = corpus.repartition(4)
+    assert(multi.rdd.getNumPartitions == 4)
+    Similarity.buildIvfIndex(spark, multi, "vec_id", "embedding", partsTag)
+    val partsTbl = Similarity.ivfArtifactNames(partsTag)._2
+    val loc = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(partsTbl)).location
+    val parts = new java.io.File(loc).listFiles().count(_.getName.startsWith("part-"))
+    val nonEmpty = spark.table(partsTbl).select("cent_id").distinct().count()
+    assert(parts >= 1 && parts <= nonEmpty,
+      s"$parts part files for $nonEmpty non-empty cells")
 
     // the 100 TB shape the bucketed vector-carrying layout buys: with NO
     // broadcast anywhere, the probe join reads the cent_id buckets (vectors

@@ -8,8 +8,9 @@ import graft.TestSpark
   * appends ([[Similarity.appendIvfSegment]]) are (1) searchable alongside
   * the bucketed base, (2) idempotent under at-least-once batch replay
   * (same batch id → overwrite, results unchanged, no duplicate
-  * candidates), and (3) cleared by a rebuild (a recentered index must not
-  * keep stale-generation segments).
+  * candidates), (3) cleared by a rebuild (a recentered index must not
+  * keep stale-generation segments), and (4) counted by
+  * [[Similarity.searchCandidateCount]] as the search scores them.
   */
 class StreamIvfAppendSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -72,5 +73,22 @@ class StreamIvfAppendSpec extends AnyFunSuite {
     assert(!rebuilt.exists(r => r._1 == 100L || r._1 == 200L),
       s"stale segment survived rebuild: $rebuilt")
     assert(rebuilt == baseline)
+  }
+
+  test("searchCandidateCount counts the segment candidates the search scores") {
+    val s = spark
+    import s.implicits._
+    build()
+    val inc = Seq((100L, Array(0.97f, 0.03f)), (101L, Array(0.02f, 0.98f)))
+      .toDF("vec_id", "embedding")
+    Similarity.appendIvfSegment(s, inc, "vec_id", "embedding", tag, 0L)
+    val q = Seq((1L, Array(1f, 0f)), (4L, Array(0f, 1f))).toDF("vec_id", "embedding")
+    // k above any query's candidate count: the search returns every
+    // candidate it scores, base and segment alike
+    val scored = Similarity.searchIvfIndex(s, q, "vec_id", "embedding", tag,
+      k = 100, nprobe = 1).count()
+    val counted = Similarity.searchCandidateCount(s, q, "vec_id", "embedding", tag,
+      nprobe = 1)
+    assert(counted == scored, s"count $counted, search scored $scored")
   }
 }

@@ -119,7 +119,15 @@ class GoldenReplaySpec extends AnyFunSuite {
     ))
   }
 
+  /** The reference fixtures are not part of this repository: a host
+    * without them fails here, naming the directory, rather than deep
+    * inside the replay.
+    */
+  private def requireFixtures(dir: String): Unit =
+    assert(new java.io.File(dir).isDirectory, s"golden fixture directory $dir is missing")
+
   private def runAndCompare(d: GoldenDataset): Unit = {
+    requireFixtures(d.dir)
     val root = Files.createTempDirectory(s"graft_golden_${d.id}").toString
     val ingest = new StatlineIngest(spark, buildReplay(d), d.source)
     val res = ingest.run(d.id, root, thirdParty = d.thirdParty,
@@ -179,6 +187,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     // exercises the v4 pagination + empty-table path against the real
     // metadata (TZ-offset Modified, ObservationCount) and real dim tables.
     val dir = "/root/reference/tests/data/83765NED"
+    requireFixtures(dir)
     val id = "83765NED"
     val base = ODataUrls.v4Base(id)
     val tables = Seq("MeasureCodes", "MeasureGroups", "Dimensions",
